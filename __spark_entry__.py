@@ -4,6 +4,13 @@
 ``queries()`` / ``oracle_sql()`` expose the declared query set from
 ``etlp_spark.queries`` (one entry per operator family, SURVEY.md §2),
 validated by the driver against DuckDB at sf=0.01.
+
+Cache contract: 15 declared queries (x16 and x114 among them) leave
+``persist()``ed frames behind after their result is consumed, and
+only the session-global ``spark.catalog.clearCache()`` releases them.
+A host application that shares the session and calls it between
+queries also drops its OWN cached relations; one that does not call
+it keeps the queries' cached blocks until the session ends.
 """
 
 from __future__ import annotations

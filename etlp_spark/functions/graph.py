@@ -115,7 +115,16 @@ def kcore(
     x100's deep cost checkpoint-I/O-bound (heap-insensitive at 16.5 s
     while its siblings dropped to ~7 s at 64g), which is why the
     cadence is a knob; the r13 study measures cadences 1/2/3 at
-    x300/x1000 before changing any default."""
+    x300/x1000 before changing any default.
+
+    Single-consumer contract: the LAST round is returned lazy, its
+    two semi-joins chained onto the previous checkpoint so they fuse
+    into the caller's action (one pin job fewer). The returned frame
+    is therefore safe to consume ONCE — by one action, or by one
+    subtree such as the explode-based ``degrees()``. A caller that
+    fans it into several subtrees or actions must pin it first
+    (``localCheckpoint(eager=True)``), or every consumer recomputes
+    the last round's joins."""
     if checkpoint_every < 1:
         # 0 would hit the modulo as an opaque ZeroDivisionError and
         # negatives would silently disable mid-run checkpointing
@@ -132,9 +141,4 @@ def kcore(
         )
         if (i + 1) % checkpoint_every == 0 and i != rounds - 1:
             cur = cur.localCheckpoint(eager=True)
-    # The LAST round is returned lazy: its two semi-joins chain onto
-    # the previous checkpoint and fuse into the caller's action (one
-    # pin job fewer). Safe because the returned frame is referenced
-    # once by the explode-based degrees() and by single-action tests;
-    # a caller that fans it into several subtrees should pin it.
     return cur

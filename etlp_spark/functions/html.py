@@ -19,9 +19,8 @@ x146+ walkers; no bs4/lxml):
   subtrees, and collapses all whitespace runs to single spaces. Malformed
   markup never raises — ``html.parser`` is a recovering tokenizer,
   exactly the posture a 100 TB crawl needs (real HTML is broken).
-- ``extract_html_text(df)`` — Arrow-batched ``mapInPandas`` wrapper
-  in the x146-x151 shape: runs in the SCAN stage, no shuffle, id
-  column preserved, per-row error containment (a None/empty input
+- ``extract_html_text(df)`` — one ``html_to_text`` row per input
+  through ``functions._payload.per_payload`` (a None/empty input
   yields empty text, never a dead task).
 
 Determinism contract (what the x155 oracle predicts): output text is
@@ -37,10 +36,11 @@ public WHATWG HTML parsing behavior via stdlib only.
 from __future__ import annotations
 
 from html.parser import HTMLParser
-from typing import TYPE_CHECKING, Iterator
+from typing import TYPE_CHECKING
+
+from etlp_spark.functions._payload import per_payload
 
 if TYPE_CHECKING:  # pragma: no cover - typing only
-    import pandas as pd
     from pyspark.sql import DataFrame
 
 __all__ = ["html_to_text", "extract_html_text", "BLOCK_TAGS"]
@@ -60,6 +60,18 @@ BLOCK_TAGS = frozenset(
         "section", "summary", "table", "tbody", "td", "tfoot", "th",
         "thead", "tr", "ul",
     }
+)
+
+
+#: ``extract_html_text`` output columns (after the id).
+_HTML_COLS = (
+    ("text", "string"),
+    ("title", "string"),
+    ("hrefs", "array<string>"),
+    ("base_href", "string"),
+    ("n_tags", "int"),
+    ("n_links", "int"),
+    ("n_dropped", "int"),
 )
 
 
@@ -202,33 +214,11 @@ def extract_html_text(
     id_col: str = "media_id",
     html_col: str = "html",
 ) -> "DataFrame":
-    """mapInPandas HTML extraction in the x146-x151 wrapper shape:
-    Arrow-batched, runs inside the scan stage (zero shuffle), id
-    name/type preserved. Composes directly with the WARC walk —
-    ``read_warc`` -> filter text/html responses -> this -> the
-    text-quality family, all before the first exchange."""
-    import pandas as pd  # noqa: F401 (kernel-side)
-
-    id_type = dict(df.dtypes)[id_col]
-    schema = (
-        f"{id_col} {id_type}, text string, title string, "
-        "hrefs array<string>, base_href string, "
-        "n_tags int, n_links int, n_dropped int"
+    """One ``html_to_text`` row per input, through ``per_payload``.
+    Composes directly with the WARC walk — ``read_warc`` -> filter
+    text/html responses -> this -> the text-quality family, all
+    before the first exchange."""
+    return per_payload(
+        df, lambda h: [html_to_text(h)], _HTML_COLS,
+        id_col=id_col, payload_col=html_col, strict=True,
     )
-
-    def kernel(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        import pandas as pd
-
-        for pdf in batches:
-            rows = [html_to_text(h) for h in pdf[html_col]]
-            out = {id_col: pdf[id_col].reset_index(drop=True)}
-            for name in (
-                "text", "title", "hrefs", "base_href",
-                "n_tags", "n_links", "n_dropped",
-            ):
-                out[name] = pd.Series(
-                    [r[name] for r in rows], dtype="object"
-                )
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(kernel, schema)

@@ -43,7 +43,9 @@ with typed metadata structs alongside. Feature extraction is
 embarrassingly parallel → ``mapInPandas`` with Arrow batches
 (``spark.sql.execution.arrow.maxRecordsPerBatch`` bounds peak memory
 per batch: payload_bytes × batch_rows must fit the executor). No
-shuffle is introduced: the UDF runs in the scan stage.
+shuffle is introduced: the UDF runs in the scan stage. The metadata
+extractors (``extract_*_metadata``, ``extract_id3_tags``) are one
+byte-walk each through ``functions._payload.per_payload``.
 """
 
 from __future__ import annotations
@@ -66,6 +68,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from etlp_spark.functions._payload import per_payload
 
 __all__ = [
     "MEDIA_SCHEMA",
@@ -1879,51 +1883,17 @@ def extract_mp3_metadata(
     strict: bool = True,
     vbr_audit: bool = False,
 ) -> DataFrame:
-    """mapInPandas MP3 metadata extraction: Arrow-batched header walk
-    over binary payloads, scan-stage (no shuffle), one output row per
-    payload. The 100 TB shape matches ``extract_features``: per-batch
-    peak memory is payload_bytes x batch_rows, bounded by
-    ``spark.sql.execution.arrow.maxRecordsPerBatch``.
-
-    The id column keeps its INPUT name and Spark type (no silent
-    int32 downcast — a 64-bit id survives round-trip exactly).
-    ``strict=False`` adds per-row error containment for crawl
-    corpora: a payload ``mp3_metadata`` rejects (not MPEG audio,
-    spliced stream) yields NULL metadata plus the ValueError text in
-    a ``parse_error`` column instead of failing the whole Spark
-    stage — one bad blob cannot kill a 100 TB scan. ``strict=True``
-    (default) keeps fail-fast semantics for curated corpora.
-    ``vbr_audit=True`` appends the Xing/Info/VBRI header columns
-    (hdr_tag / hdr_frames / hdr_bytes / hdr_consistent /
+    """One ``mp3_metadata`` row per payload, through ``per_payload``
+    (batch shape, id passthrough and the ``strict`` contract are
+    documented there). ``strict=False`` contains non-MPEG or spliced
+    payloads. ``vbr_audit=True`` appends the Xing/Info/VBRI header
+    columns (hdr_tag / hdr_frames / hdr_bytes / hdr_consistent /
     duration_source — see ``mp3_metadata``)."""
-    id_type = dict(media_df.dtypes)[id_col]
-    cols = list(_MP3_META_COLS) + (
-        list(_MP3_AUDIT_COLS) if vbr_audit else []
+    cols = _MP3_META_COLS + (_MP3_AUDIT_COLS if vbr_audit else ())
+    return per_payload(
+        media_df, lambda b: [mp3_metadata(b)], cols,
+        id_col=id_col, payload_col=payload_col, strict=strict,
     )
-    if not strict:
-        cols.append(("parse_error", "string"))
-    schema = ", ".join(
-        [f"{id_col} {id_type}"] + [f"{n} {t}" for n, t in cols]
-    )
-
-    def kernel(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            metas = []
-            for b in pdf[payload_col]:
-                try:
-                    metas.append(mp3_metadata(b))
-                except ValueError as e:
-                    if strict:
-                        raise
-                    metas.append({"parse_error": str(e)})
-            out = {id_col: pdf[id_col]}
-            for name, _t in cols:
-                out[name] = pd.Series(
-                    [m.get(name) for m in metas], dtype="object"
-                )
-            yield pd.DataFrame(out)
-
-    return media_df.mapInPandas(kernel, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -2261,40 +2231,13 @@ def extract_id3_tags(
     *,
     strict: bool = True,
 ) -> DataFrame:
-    """mapInPandas ID3 tag extraction — the descriptive-metadata
-    sibling of ``extract_mp3_metadata`` with the identical 100 TB
-    shape: Arrow-batched byte-walk in the SCAN stage (no shuffle,
-    one output row per payload), per-batch peak memory bounded by
-    ``spark.sql.execution.arrow.maxRecordsPerBatch``, input id name
-    and Spark type preserved. ``strict=False`` contains per-row
-    failures (no tag at all, unsupported version) as NULL metadata +
-    the ValueError text in ``parse_error``."""
-    id_type = dict(media_df.dtypes)[id_col]
-    cols = list(_ID3_COLS)
-    if not strict:
-        cols.append(("parse_error", "string"))
-    schema = ", ".join(
-        [f"{id_col} {id_type}"] + [f"{n} {t}" for n, t in cols]
+    """One ``id3_tags`` row per payload, through ``per_payload``.
+    ``strict=False`` contains payloads with no tag at all or an
+    unsupported tag version."""
+    return per_payload(
+        media_df, lambda b: [id3_tags(b)], _ID3_COLS,
+        id_col=id_col, payload_col=payload_col, strict=strict,
     )
-
-    def kernel(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            metas = []
-            for b in pdf[payload_col]:
-                try:
-                    metas.append(id3_tags(b))
-                except ValueError as e:
-                    if strict:
-                        raise
-                    metas.append({"parse_error": str(e)})
-            out = {id_col: pdf[id_col]}
-            for name, _t in cols:
-                out[name] = pd.Series(
-                    [m.get(name) for m in metas], dtype="object"
-                )
-            yield pd.DataFrame(out)
-
-    return media_df.mapInPandas(kernel, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -2590,41 +2533,13 @@ def extract_mp4_metadata(
     *,
     strict: bool = True,
 ) -> DataFrame:
-    """mapInPandas MP4/ISO-BMFF metadata extraction — the container
-    sibling of ``extract_mp3_metadata`` with the identical 100 TB
-    shape: Arrow-batched byte-walk in the SCAN stage (no shuffle,
-    one output row per payload), per-batch peak memory bounded by
-    ``spark.sql.execution.arrow.maxRecordsPerBatch``, input id name
-    and Spark type preserved. ``strict=False`` contains per-row
-    failures (not a container, corrupt box sizes) as NULL metadata +
-    the ValueError text in ``parse_error`` — one bad blob cannot
-    kill a 100 TB scan."""
-    id_type = dict(media_df.dtypes)[id_col]
-    cols = list(_MP4_META_COLS)
-    if not strict:
-        cols.append(("parse_error", "string"))
-    schema = ", ".join(
-        [f"{id_col} {id_type}"] + [f"{n} {t}" for n, t in cols]
+    """One ``mp4_metadata`` row per payload, through ``per_payload``.
+    ``strict=False`` contains non-container payloads and corrupt box
+    sizes."""
+    return per_payload(
+        media_df, lambda b: [mp4_metadata(b)], _MP4_META_COLS,
+        id_col=id_col, payload_col=payload_col, strict=strict,
     )
-
-    def kernel(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            metas = []
-            for b in pdf[payload_col]:
-                try:
-                    metas.append(mp4_metadata(b))
-                except ValueError as e:
-                    if strict:
-                        raise
-                    metas.append({"parse_error": str(e)})
-            out = {id_col: pdf[id_col]}
-            for name, _t in cols:
-                out[name] = pd.Series(
-                    [m.get(name) for m in metas], dtype="object"
-                )
-            yield pd.DataFrame(out)
-
-    return media_df.mapInPandas(kernel, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -2991,42 +2906,14 @@ def extract_exif_metadata(
     *,
     strict: bool = True,
 ) -> DataFrame:
-    """mapInPandas JPEG EXIF extraction — the image sibling of
-    ``extract_mp4_metadata`` with the identical 100 TB shape:
-    Arrow-batched byte-walk in the SCAN stage (no shuffle, one output
-    row per payload), per-batch peak memory bounded by
-    ``spark.sql.execution.arrow.maxRecordsPerBatch``, input id name
-    and Spark type preserved. ``strict=False`` contains per-row
-    failures (not a JPEG at all) as NULL metadata + the ValueError
-    text in ``parse_error`` — one bad blob cannot kill a 100 TB scan.
+    """One ``exif_metadata`` row per payload, through ``per_payload``.
+    ``strict=False`` contains payloads that are not a JPEG at all.
     Corrupt Exif INSIDE a real JPEG never raises: it degrades to
     None fields + clean=0 (see ``exif_metadata``)."""
-    id_type = dict(media_df.dtypes)[id_col]
-    cols = list(_EXIF_COLS)
-    if not strict:
-        cols.append(("parse_error", "string"))
-    schema = ", ".join(
-        [f"{id_col} {id_type}"] + [f"{n} {t}" for n, t in cols]
+    return per_payload(
+        media_df, lambda b: [exif_metadata(b)], _EXIF_COLS,
+        id_col=id_col, payload_col=payload_col, strict=strict,
     )
-
-    def kernel(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            metas = []
-            for b in pdf[payload_col]:
-                try:
-                    metas.append(exif_metadata(b))
-                except ValueError as e:
-                    if strict:
-                        raise
-                    metas.append({"parse_error": str(e)})
-            out = {id_col: pdf[id_col]}
-            for name, _t in cols:
-                out[name] = pd.Series(
-                    [m.get(name) for m in metas], dtype="object"
-                )
-            yield pd.DataFrame(out)
-
-    return media_df.mapInPandas(kernel, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -3235,37 +3122,12 @@ def extract_webp_metadata(
     *,
     strict: bool = True,
 ) -> DataFrame:
-    """mapInPandas RIFF/WebP metadata extraction — identical 100 TB
-    shape to ``extract_mp4_metadata``/``extract_exif_metadata``:
-    Arrow-batched byte-walk in the SCAN stage, no shuffle, one output
-    row per payload, id name/type preserved; ``strict=False``
-    contains non-WebP blobs as NULL rows + ``parse_error``."""
-    id_type = dict(media_df.dtypes)[id_col]
-    cols = list(_WEBP_COLS)
-    if not strict:
-        cols.append(("parse_error", "string"))
-    schema = ", ".join(
-        [f"{id_col} {id_type}"] + [f"{n} {t}" for n, t in cols]
+    """One ``webp_metadata`` row per payload, through ``per_payload``.
+    ``strict=False`` contains non-WebP blobs."""
+    return per_payload(
+        media_df, lambda b: [webp_metadata(b)], _WEBP_COLS,
+        id_col=id_col, payload_col=payload_col, strict=strict,
     )
-
-    def kernel(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            metas = []
-            for b in pdf[payload_col]:
-                try:
-                    metas.append(webp_metadata(b))
-                except ValueError as e:
-                    if strict:
-                        raise
-                    metas.append({"parse_error": str(e)})
-            out = {id_col: pdf[id_col]}
-            for name, _t in cols:
-                out[name] = pd.Series(
-                    [m.get(name) for m in metas], dtype="object"
-                )
-            yield pd.DataFrame(out)
-
-    return media_df.mapInPandas(kernel, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -3494,37 +3356,12 @@ def extract_png_text_metadata(
     *,
     strict: bool = True,
 ) -> DataFrame:
-    """mapInPandas PNG ancillary-metadata extraction — identical
-    100 TB shape to the EXIF/WebP/MP4 kernels: Arrow-batched
-    byte-walk in the SCAN stage, no shuffle, one output row per
-    payload, id name/type preserved; ``strict=False`` contains
-    non-PNG blobs as NULL rows + ``parse_error``."""
-    id_type = dict(media_df.dtypes)[id_col]
-    cols = list(_PNG_TEXT_COLS)
-    if not strict:
-        cols.append(("parse_error", "string"))
-    schema = ", ".join(
-        [f"{id_col} {id_type}"] + [f"{n} {t}" for n, t in cols]
+    """One ``png_text_metadata`` row per payload, through
+    ``per_payload``. ``strict=False`` contains non-PNG blobs."""
+    return per_payload(
+        media_df, lambda b: [png_text_metadata(b)], _PNG_TEXT_COLS,
+        id_col=id_col, payload_col=payload_col, strict=strict,
     )
-
-    def kernel(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            metas = []
-            for b in pdf[payload_col]:
-                try:
-                    metas.append(png_text_metadata(b))
-                except ValueError as e:
-                    if strict:
-                        raise
-                    metas.append({"parse_error": str(e)})
-            out = {id_col: pdf[id_col]}
-            for name, _t in cols:
-                out[name] = pd.Series(
-                    [m.get(name) for m in metas], dtype="object"
-                )
-            yield pd.DataFrame(out)
-
-    return media_df.mapInPandas(kernel, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -4596,37 +4433,13 @@ def extract_audio_container_metadata(
     *,
     strict: bool = True,
 ) -> DataFrame:
-    """mapInPandas FLAC/Ogg metadata extraction — identical 100 TB
-    shape to the other extract wrappers: Arrow-batched byte-walk in
-    the SCAN stage, no shuffle, one output row per payload, id
-    name/type preserved; ``strict=False`` contains other blobs as
-    NULL rows + ``parse_error``."""
-    id_type = dict(media_df.dtypes)[id_col]
-    cols = list(_AUDIO_CONTAINER_COLS)
-    if not strict:
-        cols.append(("parse_error", "string"))
-    schema = ", ".join(
-        [f"{id_col} {id_type}"] + [f"{n} {t}" for n, t in cols]
+    """One ``audio_container_metadata`` row per payload, through
+    ``per_payload``. ``strict=False`` contains blobs that are neither
+    FLAC nor Ogg Vorbis."""
+    return per_payload(
+        media_df, lambda b: [audio_container_metadata(b)], _AUDIO_CONTAINER_COLS,
+        id_col=id_col, payload_col=payload_col, strict=strict,
     )
-
-    def kernel(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            metas = []
-            for b in pdf[payload_col]:
-                try:
-                    metas.append(audio_container_metadata(b))
-                except ValueError as e:
-                    if strict:
-                        raise
-                    metas.append({"parse_error": str(e)})
-            out = {id_col: pdf[id_col]}
-            for name, _t in cols:
-                out[name] = pd.Series(
-                    [m.get(name) for m in metas], dtype="object"
-                )
-            yield pd.DataFrame(out)
-
-    return media_df.mapInPandas(kernel, schema)
 
 
 def orientation_invariant_descriptor(

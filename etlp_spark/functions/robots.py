@@ -18,7 +18,7 @@ Pure stdlib, the x146+ walker posture:
 - ``rule_regex(pattern)`` — RFC 9309 path patterns to Java/RE2-safe
   regex: specials escaped, ``*`` → ``.*``, one TRAILING ``$`` is the
   end-of-URL anchor (a mid-pattern ``$`` is a literal).
-- ``extract_robots_rules(df)`` — Arrow-batched explosion to ONE ROW
+- ``extract_robots_rules(df)`` — ``per_payload`` explosion to ONE ROW
   PER RULE (host, allow, pattern, pattern_len, rule_regex) plus the
   group's crawl_delay_ms and the file's sitemap/unknown/clean
   counts — AND the ``Sitemap:`` URLs themselves (``sitemaps``
@@ -39,13 +39,28 @@ from __future__ import annotations
 
 import math
 import re
-from typing import TYPE_CHECKING, Iterator
+from typing import TYPE_CHECKING
+
+from etlp_spark.functions._payload import per_payload
 
 if TYPE_CHECKING:  # pragma: no cover - typing only
-    import pandas as pd
     from pyspark.sql import DataFrame
 
 __all__ = ["parse_robots", "rule_regex", "extract_robots_rules"]
+
+
+#: ``extract_robots_rules`` output columns (after the id).
+_ROBOTS_COLS = (
+    ("allow", "int"),
+    ("pattern", "string"),
+    ("pattern_len", "int"),
+    ("rule_regex", "string"),
+    ("crawl_delay_ms", "bigint"),
+    ("n_sitemaps", "int"),
+    ("sitemaps", "array<string>"),
+    ("n_unknown", "int"),
+    ("clean", "int"),
+)
 
 
 def rule_regex(pattern: str) -> str:
@@ -146,49 +161,24 @@ def extract_robots_rules(
     *,
     agent: str = "*",
 ) -> "DataFrame":
-    """mapInPandas explosion to one row per selected rule (plus one
-    pattern-NULL row for rule-less hosts) — see module doc. The
-    output is hosts-sized: broadcast it against the URL frontier."""
-    import pandas as pd  # noqa: F401 (kernel-side)
+    """One row per selected rule (plus one pattern-NULL row for
+    rule-less hosts) — see module doc. The output is hosts-sized:
+    broadcast it against the URL frontier."""
 
-    id_type = dict(df.dtypes)[id_col]
-    schema = (
-        f"{id_col} {id_type}, allow int, pattern string, "
-        "pattern_len int, rule_regex string, crawl_delay_ms bigint, "
-        "n_sitemaps int, sitemaps array<string>, "
-        "n_unknown int, clean int"
-    )
-
-    def kernel(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        import pandas as pd
-
-        for pdf in batches:
-            out: dict[str, list] = {
-                id_col: [], "allow": [], "pattern": [],
-                "pattern_len": [], "rule_regex": [],
-                "crawl_delay_ms": [], "n_sitemaps": [],
-                "sitemaps": [], "n_unknown": [], "clean": [],
+    def rules(txt: "str | None") -> "list[dict]":
+        meta = parse_robots(txt, agent)
+        return [
+            {
+                **meta,
+                "allow": allow,
+                "pattern": pattern,
+                "pattern_len": None if pattern is None else len(pattern),
+                "rule_regex": None if pattern is None else rule_regex(pattern),
             }
-            for hid, txt in zip(pdf[id_col], pdf[text_col]):
-                meta = parse_robots(txt, agent)
-                rows = meta["rules"] or [(None, None)]
-                for allow, pattern in rows:
-                    out[id_col].append(hid)
-                    out["allow"].append(allow)
-                    out["pattern"].append(pattern)
-                    out["pattern_len"].append(
-                        None if pattern is None else len(pattern)
-                    )
-                    out["rule_regex"].append(
-                        None if pattern is None else rule_regex(pattern)
-                    )
-                    out["crawl_delay_ms"].append(meta["crawl_delay_ms"])
-                    out["n_sitemaps"].append(meta["n_sitemaps"])
-                    out["sitemaps"].append(meta["sitemaps"])
-                    out["n_unknown"].append(meta["n_unknown"])
-                    out["clean"].append(meta["clean"])
-            yield pd.DataFrame(
-                {k: pd.Series(v, dtype="object") for k, v in out.items()}
-            )
+            for allow, pattern in meta["rules"] or [(None, None)]
+        ]
 
-    return df.mapInPandas(kernel, schema)
+    return per_payload(
+        df, rules, _ROBOTS_COLS,
+        id_col=id_col, payload_col=text_col, strict=True,
+    )

@@ -18,7 +18,7 @@ containment this engine uses everywhere):
   the LOCAL tag name); entries missing ``<loc>`` are skipped and
   counted as damage; non-XML / wrong-root input yields zero entries
   with ``clean=0`` and the parser error string. Nothing raises.
-- ``extract_sitemap_entries(df)`` — Arrow-batched explosion to one
+- ``extract_sitemap_entries(df)`` — ``per_payload`` explosion to one
   row per entry (id, kind, loc, lastmod, n_entries, clean,
   parse_error); a damaged or empty document still yields one
   loc-NULL sentinel row (the robots/WARC walker pattern).
@@ -37,13 +37,25 @@ x151/x155/x157/x158); sitemaps.org public protocol only.
 from __future__ import annotations
 
 import xml.etree.ElementTree as ET
-from typing import TYPE_CHECKING, Iterator
+from typing import TYPE_CHECKING
+
+from etlp_spark.functions._payload import per_payload
 
 if TYPE_CHECKING:  # pragma: no cover - typing only
-    import pandas as pd
     from pyspark.sql import DataFrame
 
 __all__ = ["parse_sitemap", "extract_sitemap_entries", "walk_sitemaps"]
+
+
+#: ``extract_sitemap_entries`` output columns (after the id).
+_SITEMAP_COLS = (
+    ("kind", "string"),
+    ("loc", "string"),
+    ("lastmod", "string"),
+    ("n_entries", "int"),
+    ("clean", "int"),
+    ("parse_error", "string"),
+)
 
 
 def _local(tag: str) -> str:
@@ -107,43 +119,23 @@ def extract_sitemap_entries(
     id_col: str = "url",
     xml_col: str = "xml",
 ) -> "DataFrame":
-    """mapInPandas explosion to one row per sitemap entry (plus one
-    loc-NULL sentinel row for damaged/empty documents) — see module
-    doc. Output is SITE-sized (sitemaps cap at 50k URLs/document by
-    protocol): broadcast it, join child references back against the
-    fetched store for the next index level."""
-    import pandas as pd  # noqa: F401 (kernel-side)
+    """One row per sitemap entry (plus one loc-NULL sentinel row for
+    damaged/empty documents) — see module doc. Output is SITE-sized
+    (sitemaps cap at 50k URLs/document by protocol): broadcast it,
+    join child references back against the fetched store for the
+    next index level."""
 
-    id_type = dict(df.dtypes)[id_col]
-    schema = (
-        f"{id_col} {id_type}, kind string, loc string, "
-        "lastmod string, n_entries int, clean int, parse_error string"
+    def entries(txt: "str | None") -> "list[dict]":
+        meta = parse_sitemap(txt)
+        return [
+            {**meta, "loc": loc, "lastmod": lastmod}
+            for loc, lastmod in meta["entries"] or [(None, None)]
+        ]
+
+    return per_payload(
+        df, entries, _SITEMAP_COLS,
+        id_col=id_col, payload_col=xml_col, strict=True,
     )
-
-    def kernel(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        import pandas as pd
-
-        for pdf in batches:
-            out: dict[str, list] = {
-                id_col: [], "kind": [], "loc": [], "lastmod": [],
-                "n_entries": [], "clean": [], "parse_error": [],
-            }
-            for sid, txt in zip(pdf[id_col], pdf[xml_col]):
-                meta = parse_sitemap(txt)
-                rows = meta["entries"] or [(None, None)]
-                for loc, lastmod in rows:
-                    out[id_col].append(sid)
-                    out["kind"].append(meta["kind"])
-                    out["loc"].append(loc)
-                    out["lastmod"].append(lastmod)
-                    out["n_entries"].append(meta["n_entries"])
-                    out["clean"].append(meta["clean"])
-                    out["parse_error"].append(meta["parse_error"])
-            yield pd.DataFrame(
-                {k: pd.Series(v, dtype="object") for k, v in out.items()}
-            )
-
-    return df.mapInPandas(kernel, schema)
 
 
 def walk_sitemaps(

@@ -31,10 +31,8 @@ pipeline's front door:
 - ``encode_warc(records, ...)`` — the inverse fixture generator
   (deterministic: gzip members are built with ``zlib.compressobj``,
   which embeds no timestamp).
-- ``extract_warc_records(df)`` — Arrow-batched ``mapInPandas`` that
-  EXPLODES payloads into one output row per record in the SCAN
-  stage: no shuffle, per-payload error containment via
-  ``strict=False``.
+- ``extract_warc_records(df)`` — EXPLODES payloads into one output
+  row per record through ``functions._payload.per_payload``.
 - ``read_warc(spark, path)`` — the source: ``binaryFile`` scan →
   ``extract_warc_records``. One task per WARC file; at 100 TB the
   unit of parallelism is the file (Common Crawl ships ~1 GB
@@ -49,10 +47,11 @@ Reference: engine-added (SURVEY.md §2.2 text-pipeline family); WARC
 from __future__ import annotations
 
 import zlib
-from typing import TYPE_CHECKING, Iterable, Iterator
+from typing import TYPE_CHECKING, Iterable
+
+from etlp_spark.functions._payload import per_payload
 
 if TYPE_CHECKING:  # pragma: no cover - typing only
-    import pandas as pd
     from pyspark.sql import DataFrame, SparkSession
 
 __all__ = [
@@ -63,8 +62,8 @@ __all__ = [
     "read_warc_stream",
 ]
 
-#: Output columns of one record row (id + parse_error added by the
-#: extract wrapper). Types are the mapInPandas schema's.
+#: Output columns of one record row (id + parse_error added by
+#: ``per_payload``).
 _WARC_COLS = (
     ("rec_index", "int"),
     ("warc_type", "string"),
@@ -600,65 +599,14 @@ def extract_warc_records(
     *,
     strict: bool = True,
 ) -> "DataFrame":
-    """mapInPandas WARC record explosion — the 100 TB shape of the
-    x146-x150 extract wrappers, except one payload yields MANY rows
-    (a WARC file is a container): Arrow-batched byte-walk in the
-    SCAN stage, no shuffle, id name/type preserved and repeated per
-    record; ``strict=False`` contains non-WARC blobs as a single
-    NULL row + ``parse_error``."""
-    import pandas as pd  # noqa: F401 (kernel-side)
-
-    id_type = dict(media_df.dtypes)[id_col]
-    cols = list(_WARC_COLS)
-    if not strict:
-        cols.append(("parse_error", "string"))
-    schema = ", ".join(
-        [f"{id_col} {id_type}"] + [f"{n} {t}" for n, t in cols]
+    """One row per ``warc_records`` record, through ``per_payload``
+    (whose flush budget bounds a task holding ~1 GB crawl segments);
+    ``strict=False`` contains a non-WARC blob as a single NULL row +
+    ``parse_error``."""
+    return per_payload(
+        media_df, warc_records, _WARC_COLS,
+        id_col=id_col, payload_col=payload_col, strict=strict,
     )
-
-    # flush thresholds: output frames are emitted as soon as the
-    # accumulated INPUT payload bytes (a lower bound on the decoded
-    # record mass held in Python) or row count crosses these, so a
-    # task's peak is ~flush-budget + ONE file's inflated records
-    # (~4-5x file size) — never a whole Arrow batch of ~1 GB crawl
-    # segments — while small fixture payloads still amortize Arrow
-    # transfer instead of shipping one tiny frame per file.
-    _FLUSH_BYTES = 64 << 20
-    _FLUSH_ROWS = 8192
-
-    def kernel(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        import pandas as pd
-
-        ids: list = []
-        metas: list[dict] = []
-        held = 0
-
-        def flush() -> "pd.DataFrame":
-            out = {id_col: pd.Series(ids)}
-            for name, _t in cols:
-                out[name] = pd.Series(
-                    [m.get(name) for m in metas], dtype="object"
-                )
-            return pd.DataFrame(out)
-
-        for pdf in batches:
-            for mid, b in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    rows = warc_records(b)
-                except ValueError as e:
-                    if strict:
-                        raise
-                    rows = [{"parse_error": str(e)}]
-                ids.extend([mid] * len(rows))
-                metas.extend(rows)
-                held += len(b) if b is not None else 0
-                if held >= _FLUSH_BYTES or len(metas) >= _FLUSH_ROWS:
-                    yield flush()
-                    ids, metas, held = [], [], 0
-        if metas:
-            yield flush()
-
-    return media_df.mapInPandas(kernel, schema)
 
 
 def read_warc(
@@ -673,10 +621,9 @@ def read_warc(
     segments, tens of thousands per crawl), each task walking its
     file's records inside the scan stage — no shuffle, and column
     pruning upstream of the walk is irrelevant because the walk IS
-    the scan. Per-task Python memory is bounded by the kernel's
-    64 MiB/8k-row flush budget plus ONE file's inflated records
-    (~4-5x the .warc.gz size) — never a whole Arrow batch of ~1 GB
-    segments. Defaults to ``strict=False``: real crawls contain
+    the scan. Per-task Python memory is bounded by ``per_payload``'s
+    flush budget plus ONE file's inflated records (~4-5x the .warc.gz
+    size). Defaults to ``strict=False``: real crawls contain
     damaged members, and an audit row beats a dead executor."""
     from pyspark.sql import functions as F
 

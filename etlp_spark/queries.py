@@ -30,6 +30,7 @@ from pyspark.sql import (
 )
 
 from etlp_spark import io, ops
+from etlp_spark.functions._payload import per_payload
 
 __all__ = ["QUERIES", "query_fns", "oracle_sqls", "QueryDef"]
 
@@ -10596,6 +10597,11 @@ def x107_pagerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Degree via a window over the SAME key the old groupBy+join pair
     # shuffled on: one exchange instead of two plus a join (§2.4
     # "window partitioned like the preceding aggregation").
+    # Caveat: count().over(partitionBy("src")) has no map-side partial
+    # aggregation, so every (src, dst) row of a hub node crosses the
+    # exchange into ONE task; the groupBy form pre-aggregated per map
+    # task. Measured only on the fixture's mild skew — A/B it at
+    # realistic hub skew before relying on it.
     ed = (
         dirs.select(
             "src",
@@ -14786,40 +14792,31 @@ def x143_mp3_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
         extract_mp3_metadata,
     )
 
-    docs = _t_fanout(spark, sf_dir, "documents").select("doc_id")
+    docs = _t_fanout(spark, sf_dir, "documents").select(
+        F.col("doc_id").cast("int").alias("media_id")
+    )
 
-    def attach(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for d in ids:
-                d = int(d)
-                nf = d % 5 + 1
-                sr = (44100, 48000, 32000)[d % 3]
-                frames = [
-                    (
-                        (112, 128, 160, 192)[(d + i) % 4]
-                        if d % 2 == 1
-                        else 128,
-                        (d + i) % 2,
-                    )
-                    for i in range(nf)
-                ]
-                payloads.append(
-                    encode_mp3_frames(
-                        frames,
-                        sr,
-                        id3v2_payload=(b"\x00" * 32 if d % 7 == 0 else None),
-                        id3v1=(d % 11 == 0),
-                    )
-                )
-            yield pd.DataFrame(
-                {"media_id": ids.astype("int32"), "payload": payloads}
+    def make(d):
+        nf = d % 5 + 1
+        sr = (44100, 48000, 32000)[d % 3]
+        frames = [
+            (
+                (112, 128, 160, 192)[(d + i) % 4] if d % 2 == 1 else 128,
+                (d + i) % 2,
             )
+            for i in range(nf)
+        ]
+        return encode_mp3_frames(
+            frames,
+            sr,
+            id3v2_payload=(b"\x00" * 32 if d % 7 == 0 else None),
+            id3v1=(d % 11 == 0),
+        )
 
-    media = docs.mapInPandas(attach, "media_id int, payload binary")
+    media = per_payload(
+        docs, lambda d: [{"payload": make(d)}], [("payload", "binary")],
+        id_col="media_id", payload_col="media_id", strict=True,
+    )
     return extract_mp3_metadata(media)
 
 
@@ -14899,32 +14896,28 @@ def x144_mp3_vbr_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         extract_mp3_metadata,
     )
 
-    docs = _t_fanout(spark, sf_dir, "documents").select("doc_id")
+    docs = _t_fanout(spark, sf_dir, "documents").select(
+        F.col("doc_id").cast("bigint").alias("media_id")
+    )
 
-    def attach(batches):
-        import pandas as pd
+    def make(d):
+        if d % 13 == 0:
+            return b"garbage-not-audio-" + str(d).encode()
+        nf = d % 6 + 2
+        sr = (44100, 48000, 32000)[d % 3]
+        frames = [
+            ((112, 128, 160, 192)[(d + i) % 4], (d + i) % 2)
+            for i in range(nf)
+        ]
+        p = encode_mp3_frames(frames, sr, xing={})
+        if d % 4 == 0:
+            p = p[: 144000 * 64 // sr + 2]  # head-truncated
+        return p
 
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for d in ids:
-                d = int(d)
-                if d % 13 == 0:
-                    payloads.append(b"garbage-not-audio-" + str(d).encode())
-                    continue
-                nf = d % 6 + 2
-                sr = (44100, 48000, 32000)[d % 3]
-                frames = [
-                    ((112, 128, 160, 192)[(d + i) % 4], (d + i) % 2)
-                    for i in range(nf)
-                ]
-                p = encode_mp3_frames(frames, sr, xing={})
-                if d % 4 == 0:
-                    p = p[: 144000 * 64 // sr + 2]  # head-truncated
-                payloads.append(p)
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
-
-    media = docs.mapInPandas(attach, "media_id bigint, payload binary")
+    media = per_payload(
+        docs, lambda d: [{"payload": make(d)}], [("payload", "binary")],
+        id_col="media_id", payload_col="media_id", strict=True,
+    )
     meta = extract_mp3_metadata(media, strict=False, vbr_audit=True)
     # NULL-free output edge (comparator tuples sort across engines):
     # contained-error rows carry sentinel -1 / 'none' / '' instead of
@@ -15155,50 +15148,44 @@ def x146_mp4_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
         extract_mp4_metadata,
     )
 
-    docs = _t_fanout(spark, sf_dir, "documents").select("doc_id")
+    docs = _t_fanout(spark, sf_dir, "documents").select(
+        F.col("doc_id").cast("bigint").alias("media_id")
+    )
 
-    def attach(batches):
-        import pandas as pd
+    def make(d):
+        if d % 13 == 0:
+            return b"not-an-mp4-payload-" + str(d).encode()
+        ts = (600, 1000, 90000)[d % 3]
+        tracks = []
+        if d % 2 == 0:
+            tracks.append(
+                {
+                    "handler": "vide",
+                    "codec": "hev1" if d % 8 == 0 else "avc1",
+                    "width": 16 * (d % 20 + 4),
+                    "height": 16 * (d % 15 + 3),
+                }
+            )
+        tracks.append(
+            {"handler": "soun", "codec": "mp4a", "timescale": 48000}
+        )
+        p = encode_mp4_boxes(
+            major_brand="mp42" if d % 3 == 0 else "isom",
+            timescale=ts,
+            duration=(d % 7 + 1) * ts + (d * 37) % ts,
+            tracks=tracks,
+            mdat_payload=b"\xaa" * (d % 97 + 16),
+            version=1 if d % 5 == 0 else 0,
+            use64=(d % 5 == 0),
+        )
+        if d % 9 == 0:
+            p = p[:-8]  # cut INTO the mdat body (head crawl)
+        return p
 
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for d in ids:
-                d = int(d)
-                if d % 13 == 0:
-                    payloads.append(
-                        b"not-an-mp4-payload-" + str(d).encode()
-                    )
-                    continue
-                ts = (600, 1000, 90000)[d % 3]
-                tracks = []
-                if d % 2 == 0:
-                    tracks.append(
-                        {
-                            "handler": "vide",
-                            "codec": "hev1" if d % 8 == 0 else "avc1",
-                            "width": 16 * (d % 20 + 4),
-                            "height": 16 * (d % 15 + 3),
-                        }
-                    )
-                tracks.append(
-                    {"handler": "soun", "codec": "mp4a", "timescale": 48000}
-                )
-                p = encode_mp4_boxes(
-                    major_brand="mp42" if d % 3 == 0 else "isom",
-                    timescale=ts,
-                    duration=(d % 7 + 1) * ts + (d * 37) % ts,
-                    tracks=tracks,
-                    mdat_payload=b"\xaa" * (d % 97 + 16),
-                    version=1 if d % 5 == 0 else 0,
-                    use64=(d % 5 == 0),
-                )
-                if d % 9 == 0:
-                    p = p[:-8]  # cut INTO the mdat body (head crawl)
-                payloads.append(p)
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
-
-    media = docs.mapInPandas(attach, "media_id bigint, payload binary")
+    media = per_payload(
+        docs, lambda d: [{"payload": make(d)}], [("payload", "binary")],
+        id_col="media_id", payload_col="media_id", strict=True,
+    )
     meta = extract_mp4_metadata(media, strict=False)
     # NULL-free output edge (x144's sentinel pattern): contained-error
     # rows carry -1 / 'none' / '' instead of SQL NULL.
@@ -15288,61 +15275,54 @@ def x147_id3_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
         extract_id3_tags,
     )
 
-    docs = _t_fanout(spark, sf_dir, "documents").select("doc_id")
+    docs = _t_fanout(spark, sf_dir, "documents").select(
+        F.col("doc_id").cast("bigint").alias("media_id")
+    )
 
-    def attach(batches):
-        import pandas as pd
+    audio = encode_mp3_frames([(128, 0), (128, 1)])
 
-        audio = encode_mp3_frames([(128, 0), (128, 1)])
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for d in ids:
-                d = int(d)
-                if d % 13 == 0:
-                    payloads.append(b"no-tag-" + str(d).encode())
-                    continue
-                if d % 11 == 0:
-                    payloads.append(
-                        audio
-                        + encode_id3v1(
-                            f"T1-{d % 100}",
-                            f"A1-{d % 50}",
-                            f"B1-{d % 20}",
-                            1970 + d % 30,
-                            track=d % 12 + 1,
-                        )
-                    )
-                    continue
-                ver = 4 if d % 5 == 0 else 3
-                year = 1980 + d % 40
-                fields = {
-                    "TIT2": f"Tïtle-{d % 100}",
-                    "TPE1": f"Ärtist-{d % 50}",
-                    "TALB": f"Albüm-{d % 20}",
-                }
-                if ver == 4:
-                    fields["TDRC"] = f"{year}-06-15"
-                else:
-                    fields["TYER"] = str(year)
-                trk = d % 12 + 1
-                fields["TRCK"] = f"{trk}/12" if d % 2 == 0 else str(trk)
-                tag = encode_id3v2(
-                    fields,
-                    version=ver,
-                    enc=(0, 1, 3)[d % 3],
-                    padding=64 if d % 4 == 0 else 0,
-                    unsync=d % 7 == 0,
-                    extra_frames=(
-                        (("PRIV", b"owner\x00" + bytes([d % 251])),)
-                        if d % 6 == 0
-                        else ()
-                    ),
-                )
-                payloads.append(tag + audio)
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
+    def make(d):
+        if d % 13 == 0:
+            return b"no-tag-" + str(d).encode()
+        if d % 11 == 0:
+            return audio + encode_id3v1(
+                f"T1-{d % 100}",
+                f"A1-{d % 50}",
+                f"B1-{d % 20}",
+                1970 + d % 30,
+                track=d % 12 + 1,
+            )
+        ver = 4 if d % 5 == 0 else 3
+        year = 1980 + d % 40
+        fields = {
+            "TIT2": f"Tïtle-{d % 100}",
+            "TPE1": f"Ärtist-{d % 50}",
+            "TALB": f"Albüm-{d % 20}",
+        }
+        if ver == 4:
+            fields["TDRC"] = f"{year}-06-15"
+        else:
+            fields["TYER"] = str(year)
+        trk = d % 12 + 1
+        fields["TRCK"] = f"{trk}/12" if d % 2 == 0 else str(trk)
+        tag = encode_id3v2(
+            fields,
+            version=ver,
+            enc=(0, 1, 3)[d % 3],
+            padding=64 if d % 4 == 0 else 0,
+            unsync=d % 7 == 0,
+            extra_frames=(
+                (("PRIV", b"owner\x00" + bytes([d % 251])),)
+                if d % 6 == 0
+                else ()
+            ),
+        )
+        return tag + audio
 
-    media = docs.mapInPandas(attach, "media_id bigint, payload binary")
+    media = per_payload(
+        docs, lambda d: [{"payload": make(d)}], [("payload", "binary")],
+        id_col="media_id", payload_col="media_id", strict=True,
+    )
     tags = extract_id3_tags(media, strict=False)
     # NULL-free output edge (x144/x146's sentinel pattern)
     return tags.select(
@@ -15439,67 +15419,58 @@ def x148_jpeg_exif(spark: SparkSession, sf_dir: str) -> DataFrame:
         extract_exif_metadata,
     )
 
-    docs = _t_fanout(spark, sf_dir, "documents").select("doc_id")
+    docs = _t_fanout(spark, sf_dir, "documents").select(
+        F.col("doc_id").cast("bigint").alias("media_id")
+    )
 
-    def attach(batches):
-        import pandas as pd
+    # true JFIF APP0 length: 2 (the length field itself) + 14
+    # body bytes = 16, so the declared segment ends BEFORE the
+    # EOI (the r14 fixture said 18, which exactly swallowed the
+    # trailing EOI — clean=1 held only by coincidence)
+    jfif = (
+        b"\xff\xd8\xff\xe0" + (16).to_bytes(2, "big")
+        + b"JFIF\x00\x01\x02\x00\x00\x01\x00\x01\x00\x00"
+        + b"\xff\xd9"
+    )
 
-        # true JFIF APP0 length: 2 (the length field itself) + 14
-        # body bytes = 16, so the declared segment ends BEFORE the
-        # EOI (the r14 fixture said 18, which exactly swallowed the
-        # trailing EOI — clean=1 held only by coincidence)
-        jfif = (
-            b"\xff\xd8\xff\xe0" + (16).to_bytes(2, "big")
-            + b"JFIF\x00\x01\x02\x00\x00\x01\x00\x01\x00\x00"
-            + b"\xff\xd9"
+    def make(d):
+        if d % 13 == 0:
+            return b"not-a-jpeg-" + str(d).encode()
+        if d % 11 == 0:
+            return jfif
+        bo = "II" if d % 2 == 0 else "MM"
+        if d % 9 == 0:
+            return encode_exif(
+                byte_order=bo, orientation=1, make="cut",
+                model="cut",
+                datetime_original="2010:06:01 12:00:00",
+                truncate_tiff_at=8,
+            )
+        gps = None
+        if d % 3 != 0:
+            gps = (
+                ((d % 90, 1), (d % 60, 1), (d % 6000, 100)),
+                "N" if d % 4 < 2 else "S",
+                ((d % 180, 1), ((d * 7) % 60, 1),
+                 ((d * 11) % 6000, 100)),
+                "E" if d % 5 < 3 else "W",
+            )
+        return encode_exif(
+            byte_order=bo,
+            orientation=d % 8 + 1,
+            make=f"Maker-{d % 7}",
+            model=f"Model-{d % 17}",
+            datetime_original=(
+                f"{2010 + d % 15}:06:{d % 28 + 1:02d}"
+                f" 12:{d % 60:02d}:00"
+            ),
+            gps=gps,
         )
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for d in ids:
-                d = int(d)
-                if d % 13 == 0:
-                    payloads.append(b"not-a-jpeg-" + str(d).encode())
-                    continue
-                if d % 11 == 0:
-                    payloads.append(jfif)
-                    continue
-                bo = "II" if d % 2 == 0 else "MM"
-                if d % 9 == 0:
-                    payloads.append(
-                        encode_exif(
-                            byte_order=bo, orientation=1, make="cut",
-                            model="cut",
-                            datetime_original="2010:06:01 12:00:00",
-                            truncate_tiff_at=8,
-                        )
-                    )
-                    continue
-                gps = None
-                if d % 3 != 0:
-                    gps = (
-                        ((d % 90, 1), (d % 60, 1), (d % 6000, 100)),
-                        "N" if d % 4 < 2 else "S",
-                        ((d % 180, 1), ((d * 7) % 60, 1),
-                         ((d * 11) % 6000, 100)),
-                        "E" if d % 5 < 3 else "W",
-                    )
-                payloads.append(
-                    encode_exif(
-                        byte_order=bo,
-                        orientation=d % 8 + 1,
-                        make=f"Maker-{d % 7}",
-                        model=f"Model-{d % 17}",
-                        datetime_original=(
-                            f"{2010 + d % 15}:06:{d % 28 + 1:02d}"
-                            f" 12:{d % 60:02d}:00"
-                        ),
-                        gps=gps,
-                    )
-                )
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
 
-    media = docs.mapInPandas(attach, "media_id bigint, payload binary")
+    media = per_payload(
+        docs, lambda d: [{"payload": make(d)}], [("payload", "binary")],
+        id_col="media_id", payload_col="media_id", strict=True,
+    )
     meta = extract_exif_metadata(media, strict=False)
     # NULL-free output edge (x144/x146/x147's sentinel pattern)
     return meta.select(
@@ -15593,50 +15564,38 @@ def x149_riff_webp(spark: SparkSession, sf_dir: str) -> DataFrame:
         extract_webp_metadata,
     )
 
-    docs = _t_fanout(spark, sf_dir, "documents").select("doc_id")
+    docs = _t_fanout(spark, sf_dir, "documents").select(
+        F.col("doc_id").cast("bigint").alias("media_id")
+    )
 
-    def attach(batches):
-        import pandas as pd
+    def make(d):
+        if d % 13 == 0:
+            return b"garbage-not-webp-" + str(d).encode()
+        if d % 11 == 0:
+            return encode_webp(
+                fmt="vp8", width=9, height=9,
+                truncate_after_chunk_header=True,
+            )
+        w, h = d % 4000 + 1, d % 3000 + 1
+        if d % 3 == 0:
+            return encode_webp(
+                fmt="vp8x", width=w, height=h,
+                alpha=d % 2 == 1,
+                anim=(d // 2) % 2 == 1,
+                icc=(d // 4) % 2 == 1,
+                exif=(d // 8) % 2 == 1,
+                xmp=(d // 16) % 2 == 1,
+            )
+        if d % 3 == 1:
+            return encode_webp(fmt="vp8", width=w, height=h)
+        return encode_webp(
+            fmt="vp8l", width=w, height=h, alpha=d % 2 == 1,
+        )
 
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for d in ids:
-                d = int(d)
-                if d % 13 == 0:
-                    payloads.append(b"garbage-not-webp-" + str(d).encode())
-                    continue
-                if d % 11 == 0:
-                    payloads.append(
-                        encode_webp(
-                            fmt="vp8", width=9, height=9,
-                            truncate_after_chunk_header=True,
-                        )
-                    )
-                    continue
-                w, h = d % 4000 + 1, d % 3000 + 1
-                if d % 3 == 0:
-                    payloads.append(
-                        encode_webp(
-                            fmt="vp8x", width=w, height=h,
-                            alpha=d % 2 == 1,
-                            anim=(d // 2) % 2 == 1,
-                            icc=(d // 4) % 2 == 1,
-                            exif=(d // 8) % 2 == 1,
-                            xmp=(d // 16) % 2 == 1,
-                        )
-                    )
-                elif d % 3 == 1:
-                    payloads.append(encode_webp(fmt="vp8", width=w, height=h))
-                else:
-                    payloads.append(
-                        encode_webp(
-                            fmt="vp8l", width=w, height=h, alpha=d % 2 == 1,
-                        )
-                    )
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
-
-    media = docs.mapInPandas(attach, "media_id bigint, payload binary")
+    media = per_payload(
+        docs, lambda d: [{"payload": make(d)}], [("payload", "binary")],
+        id_col="media_id", payload_col="media_id", strict=True,
+    )
     meta = extract_webp_metadata(media, strict=False)
     # NULL-free output edge (x144/x146-x148's sentinel pattern)
     return meta.select(
@@ -15730,61 +15689,49 @@ def x150_png_text(spark: SparkSession, sf_dir: str) -> DataFrame:
         extract_png_text_metadata,
     )
 
-    docs = _t_fanout(spark, sf_dir, "documents").select("doc_id")
+    docs = _t_fanout(spark, sf_dir, "documents").select(
+        F.col("doc_id").cast("bigint").alias("media_id")
+    )
 
-    def attach(batches):
-        import pandas as pd
+    def make(d):
+        if d % 13 == 0:
+            return b"not-a-png-" + str(d).encode()
+        w, h = d % 800 + 1, d % 600 + 1
+        ct = (0, 2, 6)[d % 3]
+        if d % 11 == 0:
+            return encode_png_text(
+                width=w, height=h, color_type=ct,
+                texts=(("Title", f"Tïtle-{d % 100}", "tEXt"),),
+                corrupt_crc=True,
+            )
+        if d % 9 == 0:
+            return encode_png_text(
+                width=w, height=h, color_type=ct,
+                texts=(("Title", "cutcut", "tEXt"),),
+                truncate_mid_chunk=True,
+            )
+        texts = [
+            (
+                "Title", f"Tïtle-{d % 100}",
+                "iTXt" if d % 2 == 0 else "tEXt",
+            ),
+            (
+                "Author", f"Author-{d % 50}",
+                "zTXt" if d % 3 == 0 else "tEXt",
+            ),
+        ]
+        if d % 4 == 0:
+            texts.append(("Software", f"etlp-{d % 7}", "tEXt"))
+        return encode_png_text(
+            width=w, height=h, color_type=ct,
+            texts=tuple(texts),
+            gamma_scaled=45455 if d % 5 == 0 else None,
+        )
 
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for d in ids:
-                d = int(d)
-                if d % 13 == 0:
-                    payloads.append(b"not-a-png-" + str(d).encode())
-                    continue
-                w, h = d % 800 + 1, d % 600 + 1
-                ct = (0, 2, 6)[d % 3]
-                if d % 11 == 0:
-                    payloads.append(
-                        encode_png_text(
-                            width=w, height=h, color_type=ct,
-                            texts=(("Title", f"Tïtle-{d % 100}", "tEXt"),),
-                            corrupt_crc=True,
-                        )
-                    )
-                    continue
-                if d % 9 == 0:
-                    payloads.append(
-                        encode_png_text(
-                            width=w, height=h, color_type=ct,
-                            texts=(("Title", "cutcut", "tEXt"),),
-                            truncate_mid_chunk=True,
-                        )
-                    )
-                    continue
-                texts = [
-                    (
-                        "Title", f"Tïtle-{d % 100}",
-                        "iTXt" if d % 2 == 0 else "tEXt",
-                    ),
-                    (
-                        "Author", f"Author-{d % 50}",
-                        "zTXt" if d % 3 == 0 else "tEXt",
-                    ),
-                ]
-                if d % 4 == 0:
-                    texts.append(("Software", f"etlp-{d % 7}", "tEXt"))
-                payloads.append(
-                    encode_png_text(
-                        width=w, height=h, color_type=ct,
-                        texts=tuple(texts),
-                        gamma_scaled=45455 if d % 5 == 0 else None,
-                    )
-                )
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
-
-    media = docs.mapInPandas(attach, "media_id bigint, payload binary")
+    media = per_payload(
+        docs, lambda d: [{"payload": make(d)}], [("payload", "binary")],
+        id_col="media_id", payload_col="media_id", strict=True,
+    )
     meta = extract_png_text_metadata(media, strict=False)
     # NULL-free output edge (x144/x146-x149's sentinel pattern)
     return meta.select(
@@ -15965,101 +15912,83 @@ def x151_warc_wet(spark: SparkSession, sf_dir: str) -> DataFrame:
     text-pipeline family); ISO 28500 / WARC 1.0 public layouts."""
     from etlp_spark.functions.warc import encode_warc, extract_warc_records
 
-    docs = _t_fanout(spark, sf_dir, "documents").select("doc_id")
+    docs = _t_fanout(spark, sf_dir, "documents").select(
+        F.col("doc_id").cast("bigint").alias("media_id")
+    )
 
-    def attach(batches):
-        import pandas as pd
+    date = "2026-01-02T03:04:05Z"
 
-        date = "2026-01-02T03:04:05Z"
+    def warcinfo(d):
+        return {
+            "warc_type": "warcinfo",
+            "record_id": f"<urn:rec:{d}-0>", "warc_date": date,
+            "content_type": "application/warc-fields",
+            "body": "software: etlp-spark\r\n",
+        }
 
-        def warcinfo(d):
-            return {
-                "warc_type": "warcinfo",
-                "record_id": f"<urn:rec:{d}-0>", "warc_date": date,
-                "content_type": "application/warc-fields",
-                "body": "software: etlp-spark\r\n",
-            }
+    def conv(d, i):
+        return {
+            "warc_type": "conversion",
+            "record_id": f"<urn:rec:{d}-{i}>", "warc_date": date,
+            "target_uri": f"https://example.org/{d}/{i}",
+            "content_type": "text/plain",
+            "body": f"txt {d} {i} " * (1 + d % 3),
+        }
 
-        def conv(d, i):
-            return {
-                "warc_type": "conversion",
-                "record_id": f"<urn:rec:{d}-{i}>", "warc_date": date,
-                "target_uri": f"https://example.org/{d}/{i}",
-                "content_type": "text/plain",
-                "body": f"txt {d} {i} " * (1 + d % 3),
-            }
+    def make(d):
+        if d % 13 == 0:
+            return b"not-a-warc-" + str(d).encode()
+        if d % 11 == 0:
+            return encode_warc([warcinfo(d), conv(d, 1)], gzip_members=True)
+        if d % 9 == 0:
+            return encode_warc(
+                [warcinfo(d), conv(d, 1)], truncate_last_payload_at=5
+            )
+        if d % 7 == 0:
+            return encode_warc(
+                [warcinfo(d), conv(d, 1)],
+                trailing_garbage=b"garbage-tail-" + str(d).encode(),
+            )
+        recs = [warcinfo(d)]
+        for i in range(1, 2 + d % 3):
+            if i == 1 and d % 5 == 0:
+                status, reason = (
+                    (200, "OK"), (301, "Moved Permanently"),
+                    (404, "Not Found"),
+                )[d % 3]
+                # wire encodings cycle by d%4: chunked transfer
+                # framing (0), gzip+chunked with a FIXED body so the
+                # declared length is a constant (2), identity
+                # otherwise — the walker must dechunk THEN inflate
+                http = {
+                    "status": status,
+                    "reason": reason,
+                    "content_type": "text/html",
+                    "body": f"<html>resp {d}</html>",
+                }
+                if d % 4 == 0:
+                    http["chunked"] = True
+                elif d % 4 == 2:
+                    http["body"] = "<html>gzip+chunked entity</html>"
+                    http["gzip"] = True
+                    http["chunked"] = True
+                recs.append(
+                    {
+                        "warc_type": "response",
+                        "record_id": f"<urn:rec:{d}-{i}>",
+                        "warc_date": date,
+                        "target_uri": f"https://example.org/{d}/{i}",
+                        "http": http,
+                    }
+                )
+            else:
+                recs.append(conv(d, i))
+        return encode_warc(recs)
 
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for d in ids:
-                d = int(d)
-                if d % 13 == 0:
-                    payloads.append(b"not-a-warc-" + str(d).encode())
-                elif d % 11 == 0:
-                    payloads.append(
-                        encode_warc(
-                            [warcinfo(d), conv(d, 1)], gzip_members=True
-                        )
-                    )
-                elif d % 9 == 0:
-                    payloads.append(
-                        encode_warc(
-                            [warcinfo(d), conv(d, 1)],
-                            truncate_last_payload_at=5,
-                        )
-                    )
-                elif d % 7 == 0:
-                    payloads.append(
-                        encode_warc(
-                            [warcinfo(d), conv(d, 1)],
-                            trailing_garbage=b"garbage-tail-"
-                            + str(d).encode(),
-                        )
-                    )
-                else:
-                    recs = [warcinfo(d)]
-                    for i in range(1, 2 + d % 3):
-                        if i == 1 and d % 5 == 0:
-                            status, reason = (
-                                (200, "OK"), (301, "Moved Permanently"),
-                                (404, "Not Found"),
-                            )[d % 3]
-                            # wire encodings cycle by d%4: chunked
-                            # transfer framing (0), gzip+chunked with
-                            # a FIXED body so the declared length is
-                            # a constant (2), identity otherwise —
-                            # the walker must dechunk THEN inflate
-                            http = {
-                                "status": status,
-                                "reason": reason,
-                                "content_type": "text/html",
-                                "body": f"<html>resp {d}</html>",
-                            }
-                            if d % 4 == 0:
-                                http["chunked"] = True
-                            elif d % 4 == 2:
-                                http["body"] = (
-                                    "<html>gzip+chunked entity</html>"
-                                )
-                                http["gzip"] = True
-                                http["chunked"] = True
-                            recs.append(
-                                {
-                                    "warc_type": "response",
-                                    "record_id": f"<urn:rec:{d}-{i}>",
-                                    "warc_date": date,
-                                    "target_uri":
-                                        f"https://example.org/{d}/{i}",
-                                    "http": http,
-                                }
-                            )
-                        else:
-                            recs.append(conv(d, i))
-                    payloads.append(encode_warc(recs))
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
-
-    media = docs.mapInPandas(attach, "media_id bigint, payload binary")
+    media = per_payload(
+        docs, lambda d: [{"payload": make(d)}], [("payload", "binary")],
+        id_col="media_id", payload_col="media_id", strict=True,
+    )
     recs = extract_warc_records(media, strict=False)
     # NULL-free output edge (x144/x146-x150's sentinel pattern)
     return recs.select(
@@ -16174,54 +16103,42 @@ def x152_flac_ogg(spark: SparkSession, sf_dir: str) -> DataFrame:
         extract_audio_container_metadata,
     )
 
-    docs = _t_fanout(spark, sf_dir, "documents").select("doc_id")
+    docs = _t_fanout(spark, sf_dir, "documents").select(
+        F.col("doc_id").cast("bigint").alias("media_id")
+    )
 
-    def attach(batches):
-        import pandas as pd
+    def make(d):
+        if d % 13 == 0:
+            return b"not-audio-" + str(d).encode()
+        flac = d % 2 == 0
+        if d % 11 == 0:
+            return (
+                encode_flac(truncate_streaminfo_at=10)
+                if flac
+                else encode_ogg_vorbis(truncate_id_page_at=10)
+            )
+        rate = (8000, 16000, 22050, 44100, 48000)[d % 5]
+        comments = [f"TITLE=Träck-{d % 100}"]
+        if d % 3 != 0:
+            comments.append(f"ARTIST=Artist-{d % 50}")
+        if d % 4 == 0:
+            comments.append(f"X-KEY=v{d}")
+        kw = dict(
+            sample_rate=rate, channels=1 + d % 3,
+            total_samples=d * 1000 + d % 7,
+            vendor=f"etlp-0.{d % 4}", comments=tuple(comments),
+        )
+        if flac:
+            return encode_flac(
+                bits_per_sample=(8, 16, 24)[d % 3],
+                padding=d % 7 == 0, **kw,
+            )
+        return encode_ogg_vorbis(corrupt_comment_crc=d % 7 == 0, **kw)
 
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for d in ids:
-                d = int(d)
-                if d % 13 == 0:
-                    payloads.append(b"not-audio-" + str(d).encode())
-                    continue
-                flac = d % 2 == 0
-                if d % 11 == 0:
-                    payloads.append(
-                        encode_flac(truncate_streaminfo_at=10)
-                        if flac
-                        else encode_ogg_vorbis(truncate_id_page_at=10)
-                    )
-                    continue
-                rate = (8000, 16000, 22050, 44100, 48000)[d % 5]
-                comments = [f"TITLE=Träck-{d % 100}"]
-                if d % 3 != 0:
-                    comments.append(f"ARTIST=Artist-{d % 50}")
-                if d % 4 == 0:
-                    comments.append(f"X-KEY=v{d}")
-                kw = dict(
-                    sample_rate=rate, channels=1 + d % 3,
-                    total_samples=d * 1000 + d % 7,
-                    vendor=f"etlp-0.{d % 4}", comments=tuple(comments),
-                )
-                if flac:
-                    payloads.append(
-                        encode_flac(
-                            bits_per_sample=(8, 16, 24)[d % 3],
-                            padding=d % 7 == 0, **kw,
-                        )
-                    )
-                else:
-                    payloads.append(
-                        encode_ogg_vorbis(
-                            corrupt_comment_crc=d % 7 == 0, **kw,
-                        )
-                    )
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
-
-    media = docs.mapInPandas(attach, "media_id bigint, payload binary")
+    media = per_payload(
+        docs, lambda d: [{"payload": make(d)}], [("payload", "binary")],
+        id_col="media_id", payload_col="media_id", strict=True,
+    )
     meta = extract_audio_container_metadata(media, strict=False)
     # NULL-free output edge (x144/x146-x151's sentinel pattern)
     return meta.select(
@@ -16323,78 +16240,61 @@ def x153_orientation_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles (functions/dedup.py); cluster membership is never
     compared all-pairs. Reference: engine-added (SURVEY.md §2.2
     multimodal family); EXIF 2.3 orientation table."""
+    import numpy as np
+
     from etlp_spark.functions.multimodal import (
         encode_exif,
         encode_jpeg,
         orientation_invariant_descriptor,
     )
 
-    docs = _t_fanout(spark, sf_dir, "documents").select("doc_id")
-
-    def attach(batches):
-        import numpy as np
-        import pandas as pd
-
-        gens = {
-            2: lambda p: p[:, ::-1],
-            3: lambda p: p[::-1, ::-1],
-            4: lambda p: p[::-1, :],
-            5: lambda p: np.rot90(p, -1)[:, ::-1],
-            6: lambda p: np.rot90(p, 1),
-            7: lambda p: np.rot90(p, 1)[:, ::-1],
-            8: lambda p: np.rot90(p, -1),
-        }
-
-        def app1(orientation):
-            ex = encode_exif(byte_order="II", orientation=orientation)
-            seglen = int.from_bytes(ex[4:6], "big")
-            return ex[2 : 4 + seglen]
-
-        for pdf in batches:
-            ids, variants, payloads = [], [], []
-            for d in pdf["doc_id"].astype("int64"):
-                d = int(d)
-                up = np.zeros((16, 16, 3), dtype=np.uint8)
-                levels = [
-                    16 + 32 * (((d // 4) + ((d + k) % 4)) % 8)
-                    for k in range(4)
-                ]
-                up[:8, :8] = levels[0]
-                up[:8, 8:] = levels[1]
-                up[8:, :8] = levels[2]
-                up[8:, 8:] = levels[3]
-                o = 2 + d % 7
-                stored = np.ascontiguousarray(gens[o](up))
-                for variant, px, tag in ((0, up, 1), (1, stored, o)):
-                    jp = encode_jpeg(px, quality=95)
-                    ids.append(d)
-                    variants.append(variant)
-                    payloads.append(jp[:2] + app1(tag) + jp[2:])
-            yield pd.DataFrame(
-                {"media_id": ids, "variant": variants, "payload": payloads}
-            )
-
-    def descriptors(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = [
-                orientation_invariant_descriptor(b)
-                for b in pdf["payload"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "raw_key": [r["raw_key"] for r in rows],
-                    "norm_key": [r["norm_key"] for r in rows],
-                }
-            )
-
-    media = docs.mapInPandas(
-        attach, "media_id bigint, variant int, payload binary"
+    docs = _t_fanout(spark, sf_dir, "documents").select(
+        F.col("doc_id").cast("bigint").alias("media_id")
     )
-    keys = media.mapInPandas(
-        descriptors, "media_id bigint, raw_key string, norm_key string"
+
+    gens = {
+        2: lambda p: p[:, ::-1],
+        3: lambda p: p[::-1, ::-1],
+        4: lambda p: p[::-1, :],
+        5: lambda p: np.rot90(p, -1)[:, ::-1],
+        6: lambda p: np.rot90(p, 1),
+        7: lambda p: np.rot90(p, 1)[:, ::-1],
+        8: lambda p: np.rot90(p, -1),
+    }
+
+    def app1(orientation):
+        ex = encode_exif(byte_order="II", orientation=orientation)
+        seglen = int.from_bytes(ex[4:6], "big")
+        return ex[2 : 4 + seglen]
+
+    def variants(d):
+        up = np.zeros((16, 16, 3), dtype=np.uint8)
+        levels = [
+            16 + 32 * (((d // 4) + ((d + k) % 4)) % 8) for k in range(4)
+        ]
+        up[:8, :8] = levels[0]
+        up[:8, 8:] = levels[1]
+        up[8:, :8] = levels[2]
+        up[8:, 8:] = levels[3]
+        o = 2 + d % 7
+        stored = np.ascontiguousarray(gens[o](up))
+        rows = []
+        for variant, px, tag in ((0, up, 1), (1, stored, o)):
+            jp = encode_jpeg(px, quality=95)
+            rows.append(
+                {"variant": variant, "payload": jp[:2] + app1(tag) + jp[2:]}
+            )
+        return rows
+
+    media = per_payload(
+        docs, variants, [("variant", "int"), ("payload", "binary")],
+        id_col="media_id", payload_col="media_id", strict=True,
+    )
+    keys = per_payload(
+        media,
+        lambda b: [orientation_invariant_descriptor(b)],
+        [("raw_key", "string"), ("norm_key", "string")],
+        id_col="media_id", payload_col="payload", strict=True,
     )
     # the band-join shuffle: group candidates by normalized key
     return keys.groupBy("norm_key").agg(
@@ -16457,40 +16357,36 @@ def x154_warc_ingest_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etlp_spark.functions import text as T
     from etlp_spark.functions.warc import encode_warc, extract_warc_records
 
-    docs = _t_fanout(spark, sf_dir, "documents").select("doc_id")
+    docs = _t_fanout(spark, sf_dir, "documents").select(
+        F.col("doc_id").cast("bigint").alias("media_id")
+    )
 
-    def attach(batches):
-        import pandas as pd
+    def make(d):
+        recs = [
+            {
+                "warc_type": "warcinfo",
+                "record_id": f"<urn:rec:{d}-0>",
+                "content_type": "application/warc-fields",
+                "body": "software: etlp-spark\r\n",
+            }
+        ]
+        for i in range(1, 2 + d % 3):
+            reps = 1 + (d + i) % 2
+            recs.append(
+                {
+                    "warc_type": "conversion",
+                    "record_id": f"<urn:rec:{d}-{i}>",
+                    "target_uri": f"https://example.org/{d}/{i}",
+                    "content_type": "text/plain",
+                    "body": f"The quick record {d}-{i}, is here. " * reps,
+                }
+            )
+        return encode_warc(recs)
 
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for d in ids:
-                d = int(d)
-                recs = [
-                    {
-                        "warc_type": "warcinfo",
-                        "record_id": f"<urn:rec:{d}-0>",
-                        "content_type": "application/warc-fields",
-                        "body": "software: etlp-spark\r\n",
-                    }
-                ]
-                for i in range(1, 2 + d % 3):
-                    reps = 1 + (d + i) % 2
-                    recs.append(
-                        {
-                            "warc_type": "conversion",
-                            "record_id": f"<urn:rec:{d}-{i}>",
-                            "target_uri": f"https://example.org/{d}/{i}",
-                            "content_type": "text/plain",
-                            "body": f"The quick record {d}-{i}, is here. "
-                            * reps,
-                        }
-                    )
-                payloads.append(encode_warc(recs))
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
-
-    media = docs.mapInPandas(attach, "media_id bigint, payload binary")
+    media = per_payload(
+        docs, lambda d: [{"payload": make(d)}], [("payload", "binary")],
+        id_col="media_id", payload_col="media_id", strict=True,
+    )
     recs = extract_warc_records(media)
     conv = recs.where(F.col("warc_type") == "conversion")
     toks = T.tokens("text")
@@ -16569,49 +16465,44 @@ def x155_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etlp_spark.functions.html import extract_html_text
     from etlp_spark.functions.warc import encode_warc, extract_warc_records
 
-    docs = _t_fanout(spark, sf_dir, "documents").select("doc_id")
+    docs = _t_fanout(spark, sf_dir, "documents").select(
+        F.col("doc_id").cast("bigint").alias("media_id")
+    )
 
-    def attach(batches):
-        import pandas as pd
+    def make(d):
+        nl = d % 4
+        html = (
+            f"<html><head><title>T&iacute;tle {d % 100}</title>"
+            "<style>body{color:red}</style></head>"
+            f"<body><!-- comment {d} -->"
+            f"<h1>Doc &amp; {d}</h1>"
+            f"<script>var x = {d} < 9000;</script>"
+            f"<p>Par&#233;graph <b>bo<i>ld</i></b> {d % 7}"
+            " words here</p>"
+            + "".join(
+                f'<div><a href="/l/{i}">link {i}</a></div>'
+                for i in range(nl)
+            )
+            + "</body></html>"
+        )
+        http = {"content_type": "text/html", "body": html}
+        if d % 3 == 0:
+            http["chunked"] = True
+        elif d % 3 == 1:
+            http["gzip"] = True
+        return encode_warc([
+            {
+                "warc_type": "response",
+                "record_id": f"<urn:rec:{d}>",
+                "target_uri": f"https://example.org/{d}",
+                "http": http,
+            }
+        ])
 
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for d in ids:
-                d = int(d)
-                nl = d % 4
-                html = (
-                    f"<html><head><title>T&iacute;tle {d % 100}</title>"
-                    "<style>body{color:red}</style></head>"
-                    f"<body><!-- comment {d} -->"
-                    f"<h1>Doc &amp; {d}</h1>"
-                    f"<script>var x = {d} < 9000;</script>"
-                    f"<p>Par&#233;graph <b>bo<i>ld</i></b> {d % 7}"
-                    " words here</p>"
-                    + "".join(
-                        f'<div><a href="/l/{i}">link {i}</a></div>'
-                        for i in range(nl)
-                    )
-                    + "</body></html>"
-                )
-                http = {"content_type": "text/html", "body": html}
-                if d % 3 == 0:
-                    http["chunked"] = True
-                elif d % 3 == 1:
-                    http["gzip"] = True
-                payloads.append(
-                    encode_warc([
-                        {
-                            "warc_type": "response",
-                            "record_id": f"<urn:rec:{d}>",
-                            "target_uri": f"https://example.org/{d}",
-                            "http": http,
-                        }
-                    ])
-                )
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
-
-    media = docs.mapInPandas(attach, "media_id bigint, payload binary")
+    media = per_payload(
+        docs, lambda d: [{"payload": make(d)}], [("payload", "binary")],
+        id_col="media_id", payload_col="media_id", strict=True,
+    )
     recs = extract_warc_records(media)
     pages = recs.where(
         (F.col("warc_type") == "response")

@@ -1,6 +1,7 @@
 """Unit tests for the north-star operator modules (SURVEY.md §7 M7)."""
 
 import math
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -1000,41 +1001,119 @@ def test_mp3_xing_walk_property():
     check()
 
 
-def test_mp3_strict_and_id_passthrough_through_spark(spark):
-    """extract_mp3_metadata hardening (r11 ADVICE items 1+2): a
-    64-bit id column keeps its name and Spark type end-to-end (no
-    int32 wrap), and strict=False contains a garbage payload as a
-    NULL row + parse_error instead of failing the stage."""
-    import pytest as _pt
+def _extractor_cases():
+    """(extractor, kwargs, good payload, one format-specific field
+    check, the strict error text) per per-payload extractor."""
+    from etlp_spark.functions import multimodal as M
+    from etlp_spark.functions import warc as W
 
-    from etlp_spark.functions.multimodal import (
-        encode_mp3_frames,
-        extract_mp3_metadata,
-    )
+    return {
+        "mp3": (
+            M.extract_mp3_metadata, {"vbr_audit": True},
+            M.encode_mp3_frames([(128, 0)] * 2, xing={}),
+            {"hdr_tag": "Xing", "n_frames": 3, "hdr_frames": 2,
+             "duration_source": "walk"},
+            "no valid MPEG audio frame found",
+        ),
+        "id3": (
+            M.extract_id3_tags, {},
+            M.encode_id3v2(
+                {"TIT2": "Söng", "TPE1": "Bänd", "TYER": "2001",
+                 "TRCK": "4"},
+                version=3, enc=1,
+            ),
+            {"title": "Söng", "artist": "Bänd", "year": 2001,
+             "track_no": 4},
+            "no ID3v1 or ID3v2 tag found",
+        ),
+        "mp4": (
+            M.extract_mp4_metadata, {},
+            M.encode_mp4_boxes(
+                timescale=1000, duration=2500,
+                tracks=[{"handler": "vide", "codec": "avc1",
+                         "width": 320, "height": 240}],
+                mdat_payload=b"z" * 5,
+            ),
+            {"duration_ms": 2500, "video_codec": "avc1", "width": 320,
+             "clean": 1},
+            "no ftyp/moov box found (not an ISO-BMFF payload)",
+        ),
+        "exif": (
+            M.extract_exif_metadata, {},
+            M.encode_exif(
+                byte_order="II", orientation=3, make="M", model="X",
+                datetime_original="2020:06:01 10:00:00",
+            ),
+            {"orientation": 3, "make": "M", "byte_order": "II",
+             "clean": 1},
+            "not a JPEG payload (no SOI marker)",
+        ),
+        "webp": (
+            M.extract_webp_metadata, {},
+            M.encode_webp(fmt="vp8", width=33, height=21),
+            {"format": "vp8", "width": 33, "height": 21},
+            "not a RIFF/WebP payload",
+        ),
+        "png_text": (
+            M.extract_png_text_metadata, {},
+            M.encode_png_text(
+                width=5, height=7, texts=(("Title", "Hi", "tEXt"),)
+            ),
+            {"title": "Hi", "width": 5, "n_text_chunks": 1},
+            "not a PNG payload (no signature)",
+        ),
+        "audio_container": (
+            M.extract_audio_container_metadata, {},
+            M.encode_flac(sample_rate=22050, total_samples=44100),
+            {"format": "flac", "duration_us": 2000000},
+            "not a FLAC or Ogg payload",
+        ),
+        "warc": (
+            W.extract_warc_records, {},
+            W.encode_warc([{
+                "warc_type": "conversion", "target_uri": "https://e.org/a",
+                "content_type": "text/plain", "body": "hello",
+            }]),
+            {"rec_index": 0, "warc_type": "conversion", "text": "hello"},
+            "not a WARC payload (no version line)",
+        ),
+    }
 
+
+@pytest.mark.parametrize("fmt", list(_extractor_cases()))
+def test_extractor_strict_and_id_passthrough_through_spark(spark, fmt):
+    """Every per-payload extractor keeps a 64-bit id's name, Spark
+    type and value end to end; under strict=False a garbage payload
+    and a NULL payload each become one NULL-metadata row carrying
+    ``parse_error`` instead of killing the stage; strict=True fails
+    fast on the garbage."""
+    extract, kw, good, fields, err = _extractor_cases()[fmt]
     big = 2**40 + 7  # would silently wrap in int32
-    rows = [
-        (big, bytearray(encode_mp3_frames([(128, 0)] * 2, xing={}))),
-        (2, bytearray(b"garbage, not mpeg audio")),
-    ]
-    df = spark.createDataFrame(rows, "blob_id bigint, payload binary")
-
-    out = extract_mp3_metadata(
-        df, id_col="blob_id", strict=False, vbr_audit=True
+    df = spark.createDataFrame(
+        [
+            (big, bytearray(good)),
+            (2, bytearray(b"garbage, not " + fmt.encode())),
+            (3, None),
+        ],
+        "blob_id bigint, payload binary",
     )
+    out = extract(df, id_col="blob_id", strict=False, **kw)
     assert dict(out.dtypes)["blob_id"] == "bigint"
-    got = {r.blob_id: r for r in out.collect()}
-    assert set(got) == {big, 2}  # 64-bit id survives exactly
-    ok, bad = got[big], got[2]
-    assert ok.parse_error is None and ok.hdr_tag == "Xing"
-    assert ok.n_frames == 3 and ok.hdr_frames == 2
-    assert ok.duration_source == "walk"
-    assert bad.parse_error == "no valid MPEG audio frame found"
-    assert bad.n_frames is None and bad.duration_ms is None
+    got = {r.blob_id: r.asDict() for r in out.collect()}
+    assert set(got) == {big, 2, 3}  # 64-bit id survives exactly
+    ok, bad, null = got[big], got[2], got[3]
+    assert ok["parse_error"] is None
+    assert {k: ok[k] for k in fields} == fields
+    assert bad["parse_error"] == err
+    assert null["parse_error"] == "null payload"
+    for row in (bad, null):
+        assert all(row[k] is None for k in fields)
 
-    # strict=True keeps fail-fast semantics on the same data
-    with _pt.raises(Exception, match="no valid MPEG"):
-        extract_mp3_metadata(df, id_col="blob_id", strict=True).collect()
+    with pytest.raises(Exception, match=re.escape(err)):
+        extract(
+            df.where(F.col("payload").isNotNull()),
+            id_col="blob_id", strict=True, **kw,
+        ).collect()
 
 
 def test_mp4_metadata_roundtrip_and_truncation():
@@ -1149,49 +1228,6 @@ def test_mp4_walk_property():
     check()
 
 
-def test_mp4_strict_and_id_passthrough_through_spark(spark):
-    """extract_mp4_metadata mirrors the MP3 kernel's hardening: a
-    64-bit id keeps its name and Spark type end-to-end, and
-    strict=False contains garbage as a NULL row + parse_error."""
-    from etlp_spark.functions.multimodal import (
-        encode_mp4_boxes,
-        extract_mp4_metadata,
-    )
-
-    big = 2**40 + 7
-    rows = [
-        (
-            big,
-            bytearray(
-                encode_mp4_boxes(
-                    timescale=1000,
-                    duration=2500,
-                    tracks=[{"handler": "vide", "codec": "avc1",
-                             "width": 320, "height": 240}],
-                    mdat_payload=b"z" * 5,
-                )
-            ),
-        ),
-        (2, bytearray(b"garbage, not a container")),
-    ]
-    df = spark.createDataFrame(rows, "blob_id bigint, payload binary")
-    out = extract_mp4_metadata(df, id_col="blob_id", strict=False)
-    assert dict(out.dtypes)["blob_id"] == "bigint"
-    got = {r.blob_id: r for r in out.collect()}
-    assert set(got) == {big, 2}
-    ok, bad = got[big], got[2]
-    assert ok.parse_error is None and ok.duration_ms == 2500
-    assert ok.video_codec == "avc1" and ok.width == 320 and ok.clean == 1
-    assert bad.parse_error == "no ftyp/moov box found (not an ISO-BMFF payload)"
-    assert bad.n_tracks is None and bad.duration_ms is None
-
-    # strict=True keeps fail-fast semantics on the same data
-    import pytest as _pt
-
-    with _pt.raises(Exception, match="not an ISO-BMFF"):
-        extract_mp4_metadata(df, id_col="blob_id", strict=True).collect()
-
-
 def test_id3_walk_property():
     """Property (hypothesis over field values / encodings / tag
     versions / unsynchronisation / padding / extra binary frames):
@@ -1293,38 +1329,6 @@ def test_id3_v1_fallback_and_truncation():
 
     with _pt.raises(ValueError, match="no ID3v1 or ID3v2 tag"):
         id3_tags(b"not-audio-at-all")
-
-
-def test_id3_strict_and_id_passthrough_through_spark(spark):
-    """extract_id3_tags mirrors the MP3/MP4 kernel hardening: a
-    64-bit id keeps its name and Spark type end-to-end, and
-    strict=False contains tagless payloads as a NULL row +
-    parse_error."""
-    from etlp_spark.functions.multimodal import (
-        encode_id3v2,
-        extract_id3_tags,
-    )
-
-    big = 2**41 + 3
-    tag = encode_id3v2(
-        {"TIT2": "Söng", "TPE1": "Bänd", "TYER": "2001", "TRCK": "4"},
-        version=3, enc=1,
-    )
-    rows = [(big, bytearray(tag)), (2, bytearray(b"no tag here"))]
-    df = spark.createDataFrame(rows, "blob_id bigint, payload binary")
-    out = extract_id3_tags(df, id_col="blob_id", strict=False)
-    assert dict(out.dtypes)["blob_id"] == "bigint"
-    got = {r.blob_id: r for r in out.collect()}
-    ok, bad = got[big], got[2]
-    assert ok.parse_error is None and ok.title == "Söng"
-    assert ok.artist == "Bänd" and ok.year == 2001 and ok.track_no == 4
-    assert bad.parse_error == "no ID3v1 or ID3v2 tag found"
-    assert bad.title is None and bad.n_frames is None
-
-    import pytest as _pt
-
-    with _pt.raises(Exception, match="no ID3v1 or ID3v2"):
-        extract_id3_tags(df, id_col="blob_id", strict=True).collect()
 
 
 def test_bmp_wav_roundtrip_property():
@@ -2619,45 +2623,6 @@ def test_exif_walk_property():
             assert m["gps_lat_udeg"] is None
 
     check()
-
-
-def test_exif_strict_and_id_passthrough_through_spark(spark):
-    """extract_exif_metadata mirrors the MP3/MP4 kernel hardening: a
-    64-bit id keeps its name and Spark type end-to-end, and
-    strict=False contains garbage as a NULL row + parse_error while
-    corrupt Exif INSIDE a real JPEG degrades (clean=0), never
-    raises."""
-    import pytest as _pt
-
-    from etlp_spark.functions.multimodal import (
-        encode_exif,
-        extract_exif_metadata,
-    )
-
-    big = 2**40 + 11
-    rows = [
-        (big, bytearray(encode_exif(
-            byte_order="II", orientation=3, make="M", model="X",
-            datetime_original="2020:06:01 10:00:00",
-        ))),
-        (2, bytearray(b"garbage, not a jpeg")),
-        (3, bytearray(encode_exif(byte_order="MM", truncate_tiff_at=4))),
-    ]
-    df = spark.createDataFrame(rows, "blob_id bigint, payload binary")
-    out = extract_exif_metadata(df, id_col="blob_id", strict=False)
-    assert dict(out.dtypes)["blob_id"] == "bigint"
-    got = {r.blob_id: r for r in out.collect()}
-    assert set(got) == {big, 2, 3}
-    ok, bad, cut = got[big], got[2], got[3]
-    assert ok.parse_error is None and ok.orientation == 3
-    assert ok.make == "M" and ok.clean == 1 and ok.byte_order == "II"
-    assert bad.parse_error == "not a JPEG payload (no SOI marker)"
-    assert bad.has_exif is None and bad.orientation is None
-    assert cut.parse_error is None and cut.clean == 0
-    assert cut.has_exif == 1 and cut.byte_order == "MM"
-
-    with _pt.raises(Exception, match="not a JPEG payload"):
-        extract_exif_metadata(df, id_col="blob_id", strict=True).collect()
 
 
 def test_webp_walk_deterministic_cases():
