@@ -455,7 +455,11 @@ def connected_components(
         # checkpointed RDDs serve reads FROM their blocks), but rounds
         # ≥2 back are unreferenced once `labels` rebinds — a driver-side
         # gc.collect() lets Spark's ContextCleaner reclaim them instead
-        # of waiting for an eventual interpreter GC.
+        # of waiting for an eventual interpreter GC. Refcounting alone
+        # is not enough: the Python DataFrame dies, but its py4j
+        # JavaObject sits in a cycle with its cached JavaMember methods,
+        # so only the cyclic collector releases the JVM handle
+        # (test_connected_components_frees_rounds_two_back).
         gc.collect()
         if changed == 0:
             converged = True

@@ -2603,9 +2603,10 @@ def exif_metadata(payload: bytes) -> dict:
     extraction contains that per-row. Inside the TIFF block every
     read is bounds-checked against the APP1 segment: a truncated or
     lying layout yields None fields + clean=0, never an exception.
-    ``clean`` also flips when the marker walk desyncs or the final
+    ``clean`` also flips when the marker walk desyncs, the final
     segment is cut (the head-truncation a crawl that kept file heads
-    produces)."""
+    produces), or the walk runs off the payload without meeting EOI
+    or SOS (a segment length that swallows the EOI)."""
     n = len(payload)
     if n < 2 or payload[0:2] != b"\xff\xd8":
         raise ValueError("not a JPEG payload (no SOI marker)")
@@ -2645,6 +2646,8 @@ def exif_metadata(payload: bytes) -> dict:
         if marker == 0xDA:  # SOS: entropy-coded data follows
             break
         pos = segend
+    else:
+        clean = 0  # walk ran off the payload with no EOI or SOS
     out: dict = {
         "byte_order": None,
         "has_exif": 0,

@@ -14,6 +14,25 @@ is chosen to survive a 1000-executor cluster reading ~100 TB:
   banned in this codebase's hot paths).
 - Session timezone pinned to UTC so timestamp semantics are
   deterministic across the DuckDB oracle and any cluster locale.
+- DataFrame call-site capture off
+  (``spark.python.sql.dataFrameDebugging.enabled=false``). With it
+  on, every ``pyspark.sql.functions`` / ``Column`` call goes through
+  PySpark's ``_with_origin`` wrapper: an active-session lookup, a JVM
+  class lookup, a ``conf.get`` and a set/clear of
+  ``PySparkCurrentOrigin`` (py4j round trips, ~16 per call), plus a
+  Python stack walk and a failing ``import IPython`` that scans
+  ``sys.path``. Building one query makes hundreds of such calls (x18:
+  204 calls, ~3,240 round trips, under cProfile). PySpark documents
+  this switch as the way to avoid that slowdown. What is lost is the
+  Python ``file:line`` in the DataFrame context of analysis errors;
+  the errors themselves (``AnalysisException`` naming the column) are
+  unchanged. To get the call sites back, pass
+  ``extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}``.
+
+  PySpark reads this value ONCE per process: the first ``functions``
+  call latches it (as false if no session is active yet), and later
+  conf changes do not move the latch. So the override only takes
+  effect when it is set before the process's first ``functions`` call.
 
 The reference's parallelism knobs (``:threads``, ``:partitions``
 buffer sizes — e.g. ``src/etlp/connector/core.clj:58``,
@@ -62,6 +81,9 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")
+        # Call-site capture costs ~16 py4j round trips per functions
+        # call; see the module docstring (and its process-wide latch).
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.warehouse.dir", os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/etlp-spark-warehouse"))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # The default codegen cache holds 100 compiled plans; this

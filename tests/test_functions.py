@@ -632,6 +632,46 @@ def test_connected_components_long_chain_pointer_jumping(spark):
     assert got == {i: 0 for i in range(n)}
 
 
+def test_connected_components_frees_rounds_two_back(spark, monkeypatch):
+    """With the automatic cyclic GC off, the checkpointed label frame
+    from two rounds back AND its JVM handle are dead when the next
+    round checkpoints. Refcounting frees the Python DataFrame, but the
+    py4j handle sits in a JavaObject/JavaMember cycle, so this holds
+    only because the loop runs ``gc.collect()`` each round."""
+    import gc
+    import weakref
+
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+
+    from etlp_spark.functions.dedup import connected_components
+
+    orig = ClassicDataFrame.localCheckpoint
+    refs: list = []
+    dead_two_back: list = []
+
+    def tracking(self, *args, **kwargs):
+        if len(refs) >= 2:
+            dead_two_back.append(all(r() is None for r in refs[-2]))
+        out = orig(self, *args, **kwargs)
+        refs.append((weakref.ref(out), weakref.ref(out._jdf)))
+        return out
+
+    monkeypatch.setattr(ClassicDataFrame, "localCheckpoint", tracking)
+    n = 64
+    nodes = spark.createDataFrame([(i,) for i in range(n)], ["doc_id"])
+    pairs = spark.createDataFrame([(i, i + 1) for i in range(n - 1)], ["a", "b"])
+    gc.collect()
+    gc.disable()
+    try:
+        got = {r.doc_id: r.cluster for r in connected_components(nodes, pairs).collect()}
+    finally:
+        gc.enable()
+    assert got == {i: 0 for i in range(n)}
+    # initial labels + >= 3 rounds, so >= 2 two-rounds-back checks
+    assert len(dead_two_back) >= 2
+    assert all(dead_two_back), dead_two_back
+
+
 def test_connected_components_raises_on_nonconvergence(spark):
     from etlp_spark.functions.dedup import connected_components
 
@@ -2552,14 +2592,21 @@ def test_exif_walk_deterministic_cases():
     assert t["byte_order"] == "II" and t["n_ifd0_entries"] is None
     assert t["make"] is None and t["orientation"] is None
 
-    # well-formed JPEG with no Exif APP1: normal row, not an error
-    jfif = (
-        b"\xff\xd8\xff\xe0" + (18).to_bytes(2, "big")
-        + b"JFIF\x00\x01\x02\x00\x00\x01\x00\x01\x00\x00\xff\xd9"
-    )
-    nm = exif_metadata(jfif)
+    # well-formed JPEG with no Exif APP1: normal row, not an error.
+    # APP0 length 16 = the 2-byte length field + 14 JFIF body bytes.
+    def jfif(app0_len):
+        return (
+            b"\xff\xd8\xff\xe0" + app0_len.to_bytes(2, "big")
+            + b"JFIF\x00\x01\x02\x00\x00\x01\x00\x01\x00\x00\xff\xd9"
+        )
+
+    nm = exif_metadata(jfif(16))
     assert nm["has_exif"] == 0 and nm["clean"] == 1
     assert nm["byte_order"] is None
+    # a declared length of 18 swallows the EOI: the walk runs off the
+    # payload without meeting EOI or SOS, so the row is not clean
+    sw = exif_metadata(jfif(18))
+    assert sw["has_exif"] == 0 and sw["clean"] == 0
 
     with _pt.raises(ValueError, match="not a JPEG payload"):
         exif_metadata(b"not-a-jpeg-payload")
