@@ -11,11 +11,12 @@ table on a 4-core host, against ~15 ms for a read given its schema),
 and the declared queries load tables hundreds of times. ``load_table``
 keeps the inferred schema and its dtypes per ``SparkSession`` (held
 weakly, so a dropped session's entries go with it), keyed on the path
-and the ``(name, mtime_ns, size)`` of every file under it: rewriting a
-table changes the key and the next call infers again. Every call still
-returns a fresh lazy scan with new expression ids, so two loads of
-one table self-join unambiguously. Non-local paths (``scheme://``)
-are not stamped and skip the cache.
+of the table's parquet file and its ``(mtime_ns, size)``: rewriting a
+table changes the stamp and the next call infers again. Every call
+still returns a fresh lazy scan with new expression ids, so two loads
+of one table self-join unambiguously. Anything that is not a local
+file (a missing or non-local path) skips the cache and is read as a
+plain ``spark.read.parquet``.
 """
 
 from __future__ import annotations
@@ -62,23 +63,13 @@ _TS_COLS = {
 _SCHEMAS: "weakref.WeakKeyDictionary[SparkSession, dict]" = weakref.WeakKeyDictionary()
 
 
-def _file_stamp(path: str) -> "tuple | None":
-    """``(name, mtime_ns, size)`` of every file under a local parquet
-    path (a file or a directory tree), or None when the path is not
-    local or does not exist (the read then infers, and raises, as
-    before)."""
-    if "://" in path or not os.path.exists(path):
+def _file_stamp(path: str) -> "tuple[int, int] | None":
+    """``(mtime_ns, size)`` of a local parquet file, or None for
+    anything else (the read then infers, and raises, as before)."""
+    if not os.path.isfile(path):
         return None
-    if os.path.isfile(path):
-        st = os.stat(path)
-        return ((os.path.basename(path), st.st_mtime_ns, st.st_size),)
-    stamp = []
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            full = os.path.join(root, f)
-            st = os.stat(full)
-            stamp.append((os.path.relpath(full, path), st.st_mtime_ns, st.st_size))
-    return tuple(sorted(stamp))
+    st = os.stat(path)
+    return (st.st_mtime_ns, st.st_size)
 
 
 def _read_parquet(spark: SparkSession, path: str) -> "tuple[DataFrame, dict[str, str]]":

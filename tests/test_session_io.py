@@ -52,20 +52,15 @@ def test_missing_column_still_raises_analysis_exception(spark):
         df.select("no_such_col")
 
 
-@pytest.mark.parametrize("layout", ["file", "directory"])
-def test_load_table_schema_cache_picks_up_rewrite(spark, tmp_path, layout):
-    table = str(tmp_path / "events.parquet")
-    # a single file (the test corpora) or a directory of part files
-    # (what Spark writes, e.g. the scale corpora)
-    path = table if layout == "file" else os.path.join(table, "part-0.parquet")
-    os.makedirs(os.path.dirname(path), exist_ok=True)
+def test_load_table_schema_cache_picks_up_rewrite(spark, tmp_path):
+    path = str(tmp_path / "events.parquet")
     ts = pa.array([0, 1_000_000], type=pa.timestamp("us"))
     pq.write_table(pa.table({"event_id": [1, 2], "ts": ts}), path)
     first = load_table(spark, str(tmp_path), "events")
     assert first.columns == ["event_id", "ts"]
     assert dict(first.dtypes)["ts"] == "timestamp"
     # a warm call is served from the cache entry for this file stamp
-    assert io._SCHEMAS[spark][table][0] == io._file_stamp(table)
+    assert io._SCHEMAS[spark][path][0] == io._file_stamp(path)
     assert load_table(spark, str(tmp_path), "events").count() == 2
 
     before = os.stat(path).st_mtime_ns
