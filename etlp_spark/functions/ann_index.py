@@ -177,7 +177,7 @@ def _ensure(spark, root, train, save, load):
 #: much smaller fair share but only 1/7th the absolute scan) — the
 #: measured remedy is centroid-count scaling (k ~ sqrt(N)), NOT
 #: ingest-time cell salting. 3.0x flags the k=8 shape without
-#: tripping on healthy mild skew (SCALE_BENCH_r13_mog.json).
+#: tripping on healthy mild skew.
 IVF_TOP_SHARE_FACTOR = 3.0
 
 
@@ -263,8 +263,7 @@ def _ivf_occupancy_properties(root, corpus, vec_col, model):
             f"fair share at k={k}, threshold "
             f"{IVF_TOP_SHARE_FACTOR}x). Worst-case probes "
             "scan that whole cell; the measured remedy is "
-            "MORE CENTROIDS (k ~ sqrt(N)), not cell salting "
-            "(SCALE_BENCH_r13_mog).",
+            "MORE CENTROIDS (k ~ sqrt(N)), not cell salting.",
             stacklevel=3,
         )
     return {

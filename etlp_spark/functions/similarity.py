@@ -56,8 +56,8 @@ def dot(a: Column, b: Column) -> Column:
 # work" applied to the DRIVER: the literal-centroid fold expressions
 # below used to be built Column-by-Column — one py4j round-trip per
 # F.lit/F.array/F.zip_with call, ~2300 round-trips ≈ 5.6 s of pure
-# driver time for x94's plan CONSTRUCTION alone, measured in
-# plans/r17/). Rendering the identical expression as ONE SQL string
+# driver time for x94's plan CONSTRUCTION alone, measured in the
+# r17 optimization round). Rendering the identical expression as ONE SQL string
 # and parsing it JVM-side with a single F.expr call collapses that to
 # ~5 ms. The parsed Catalyst tree is the same operator-for-operator
 # (zip_with → aggregate left fold, double literals via shortest

@@ -39,13 +39,13 @@ __all__ = ["QUERIES", "query_fns", "oracle_sqls", "QueryDef"]
 class QueryDef:
     name: str
     fn: Callable[[SparkSession, str], DataFrame]
-    oracle: str | None  # None → driver records weaker rows-only check
+    oracle: str
 
 
 QUERIES: dict[str, QueryDef] = {}
 
 
-def _register(name: str, oracle: str | None):
+def _register(name: str, oracle: str):
     def deco(fn):
         QUERIES[name] = QueryDef(name, fn, oracle)
         return fn
@@ -58,7 +58,7 @@ def query_fns() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sqls() -> dict[str, str]:
-    return {name: q.oracle for name, q in QUERIES.items() if q.oracle is not None}
+    return {name: q.oracle for name, q in QUERIES.items()}
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -6907,12 +6907,12 @@ def r1_reachability_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     Perf (opt r17): Spark's UnionLoop inlines every CTE the
     recursive step references, so the original verbatim form re-ran
     the corpus scan + window + distinct INSIDE each iteration (the
-    executed plan carried two full copies of the edge pipeline —
-    plans/r17/r1_reachability_hops_before.txt). The edge set is now
-    pinned once (eager localCheckpoint, the engine's iterative-graph
-    discipline) and only the recursion runs in the WITH RECURSIVE
-    plan — one corpus pass total instead of one per hop, same rows
-    (the oracle still executes the single-statement form)."""
+    executed plan carried two full copies of the edge pipeline). The
+    edge set is now pinned once (eager localCheckpoint, the engine's
+    iterative-graph discipline) and only the recursion runs in the
+    WITH RECURSIVE plan — one corpus pass total instead of one per
+    hop, same rows (the oracle still executes the single-statement
+    form)."""
     ev = _t(spark, sf_dir, "events")
     ev.createOrReplaceTempView("r1_events")
     edges = spark.sql(
@@ -9379,7 +9379,7 @@ def x96_cdc_apply_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # projection now emits each row's applicable ops as an array of
     # conditional structs and explodes it: identical change-row SET
     # (branch membership per key is unchanged), ONE scan, zero
-    # pre-window exchanges (plans/r17/x96_cdc_apply_latest_*.txt).
+    # pre-window exchanges.
     orders = _t(spark, sf_dir, "orders")
     cents = F.floor(F.col("o_totalprice") * 100).cast("long")
     base = orders.where(F.col("o_orderkey") % 4 != 0).select(
@@ -17616,278 +17616,3 @@ def x163_domain_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-
-
-# =====================================================================
-# Registration-order rotation for the correctness gate.
-#
-# The per-round gate records the FIRST 50 registered queries
-# (CORRECTNESS_r01/r02 both contain exactly the first 50, in
-# registration order). Rounds 1-2 verified the 50 below, all green.
-# Registering the not-yet-gated queries first lets each round verify
-# NEW queries, growing cumulative driver-verified coverage instead of
-# re-checking the same 50 forever. Local pre-flight
-# (tests/test_queries_oracle.py) still checks every query each run.
-# =====================================================================
-
-_GATED_PRIOR_ROUNDS = [
-    # round 4 gated these 50 (CORRECTNESS_r04.json) — all green:
-    "x20_tfidf_topterms", "x21_quality_gates", "x22_dedup_canonical",
-    "x23_sequence_packing", "x24_contamination_check", "x25_pii_scrub",
-    "x26_shuffle_shard", "x27_repetition_stats", "x28_unigram_logprob",
-    "x29_embedding_quantize", "x30_ivf_assign_fixed",
-    "x31_retrieval_topk_docs", "q08_market_share", "q11_important_nations",
-    "q13_custdist", "q16_supplier_part_counts",
-    "q17_small_quantity_revenue", "q20_heavy_part_suppliers",
-    "q21_waiting_supplier", "m3_mapping_nested",
-    "g8_salted_quantity_rollup", "g9_hll_sketch_union",
-    "j8_salted_join_priority", "f6_variant_json",
-    "x46_simhash_hamming_neardup", "x47_quality_tertile_buckets",
-    "x48_label_centroids", "x49_vocab_coverage",
-    "w9_session_window_builtin", "x50_train_split", "x51_token_entropy",
-    "x52_containment_pairs", "x53_bigram_pmi", "x54_metric_correlation",
-    "x55_daily_anomaly_zscore", "x56_dup_rate_by_source",
-    "x57_uniform_k_sample", "x58_langid_confusion",
-    "w10_transition_matrix", "x59_winsorized_stats",
-    "w11_range_frame_rolling", "w12_gap_fill_ffill", "x60_doc_chunks",
-    "j11_lateral_topk", "g13_modal_event_type",
-    # (the other 5 of r4's 50 — x12/x1/x2/w6/j9 re-gated canaries —
-    # already appear in the r1-r3 blocks below)
-    # round 3 gated these 50 (CORRECTNESS_r03.json) — all green:
-    "w5_batch_sessionize", "x33_time_decay_engagement",
-    "j9_asof_forward_tolerance", "w6_scd2_intervals",
-    "p2_unpivot_event_counts", "x35_weighted_sample",
-    "x36_dup_ngram_fraction", "x37_group_topk_sample",
-    "x32_bm25_retrieval", "x34_domain_mixture_sample",
-    "x38_incremental_dedup", "x39_funnel_conversion", "w7_session_paths",
-    "g10_rolling_distinct_users", "x40_fuzzy_name_match",
-    "f7_map_funcs", "w8_retention_curve", "x42_minhash_estimate_quality",
-    "x43_temperature_mixture", "g11_quality_deciles",
-    "g12_key_skew_profile", "j10_nonequi_time_join",
-    "x44_source_precedence_dedup", "x45_domain_percent_rank",
-    "m4_mapping_switch_call", "x10_ann_rerank", "x11_bpe_tokens",
-    "x12_ivf_ann", "x13_char_ngram_jaccard", "x14_edit_distance",
-    "x15_profile", "x16_embedding_neardup", "x17_winnow_fingerprint",
-    "x18_neardup_clusters", "x19_stratified_sample", "f5_regex_json",
-    "q02_min_acctbal_supplier", "q04_order_priority_check",
-    "q05_local_supplier_volume", "q06_forecast_revenue",
-    "q07_volume_shipping", "q09_product_type_profit",
-    "q10_returned_items", "q12_priority_shipmode", "q14_promo_effect",
-    "q15_top_supplier", "q18_large_volume_customer",
-    "q19_disjunctive_revenue", "q22_idle_balance", "w4_per_user_trend",
-    # rounds 1-2 gated these 50 — all green:
-    "q01_pricing_summary", "t1_map_revenue", "t2_filter_shipped",
-    "t3_explode_words", "t4_keep_json_k", "t5_batch_counts",
-    "t6_array_sum", "t8_concat_flags", "a1_counts", "d5_union_merge",
-    "m2_envelope", "j1_order_customer", "j2_region_revenue",
-    "j3_semi_customers_with_orders", "j4_anti_orders_no_lineitem",
-    "w1_rank_orders", "w2_lag_lead_events", "s1_intersect_active_custs",
-    "s2_except_inactive_custs", "k1_top_orders", "g1_rollup_flags",
-    "g2_distinct_users_by_type", "x1_text_stats", "x2_lang_id",
-    "x3_quality_score", "x4_exact_dedup", "x5_minhash_lsh", "x6_simhash",
-    "x7_cosine_topk", "x8_srp_buckets", "x9_multimodal_features",
-    "m1_mapping_dsl", "j5_asof_last_signup", "j6_range_join_ship_window",
-    "g3_cube_flags", "g4_time_bucket_rollup", "g5_percentiles",
-    "g6_approx_distinct_guard", "m2b_envelope_roundtrip",
-    "q03_shipping_priority", "s3_distinct_pairs", "f1_string_funcs",
-    "f2_date_funcs", "f3_array_funcs", "f4_math_funcs",
-    "j7_outer_join_counts", "w3_running_sum", "s4_union_distinct",
-    "g7_grouping_sets", "p1_pivot_event_types",
-    # round 5 gated these 50 (CORRECTNESS_r05.json) — all green:
-    "x61_zipf_slope", "x62_langid_calibration", "w13_ewma_smoothed",
-    "x63_retrieval_dcg", "w14_ohlc_candles", "x64_corpus_drift",
-    "x65_tokenizer_fertility", "x66_hard_negatives",
-    "r1_reachability_hops", "j12_asof_nearest",
-    "x67_data_quality_report", "f8_try_functions", "w15_centered_ma",
-    "x68_chunk_dedup_rate",
-    "x69_countmin_heavyhitters", "x70_segment_dedup",
-    "w16_distribution_ranks", "x74_touch_attribution",
-    "x71_ann_recall", "x72_luhn_check", "x73_bigram_logprob",
-    "x75_pq_codes", "x76_semdedup_prune", "x78_ngram_novelty",
-    "w17_bounce_rate", "x84_token_gini", "r2_pagerank_int",
-    "f9_bitwise_funcs", "x85_weighted_reservoir",
-    # (r5's other 21 gate slots were canaries already listed above)
-    # round 7 gated these (CORRECTNESS_r07.json) — all green (the
-    # other 40 r7 slots were the r3-era canaries listed above):
-    "x86_bloom_membership", "x87_dsir_importance",
-    "x89_bpe_merge_candidates", "x90_repeated_substring_spans",
-    "x91_matryoshka_recall", "x92_cooccurrence_triangles",
-    "x93_pq_adc_topk", "x94_ivf_adc_search", "x95_hybrid_rrf_fusion",
-    "x96_cdc_apply_latest",
-    # round 8 gated these (CORRECTNESS_r08.json) — all green (the
-    # other 39 r8 slots were x87 + r4-era canaries listed above):
-    "x97_hll_registers", "x98_source_overlap_matrix",
-    "x99_cuped_adjusted_delta", "x100_kcore_membership",
-    "x101_srm_check", "x102_zorder_layout", "x103_ddsketch_quantiles",
-    "x105_unseen_mass", "x106_mixture_allocation", "j13_bloom_prejoin",
-    # round 9 gated these (CORRECTNESS_r09.json) — all green (the
-    # other 19 r9 slots were x103/x98 + the r8-verdict stale block,
-    # all listed above):
-    "x103b_ddsketch_audited", "x107_pagerank_topk",
-    "x108_kmeans_update", "x109_editdistance_neardup",
-    "x110_funnel_steps", "x111_calibration_bins", "x112_k_anonymity",
-    "x113_power_iteration", "x114_prefix_filter_jaccard",
-    "x115_kneser_ney_bigram", "x116_poisson_bootstrap",
-    "x117_hll_set_algebra", "x118_postings_delta_bits",
-    "x119_l_diversity", "x120_cusum_drift", "x121_ams_f2",
-    "x122_kmeanspp_oversample", "x123_feature_hashing",
-    "x124_simpson_reversal", "x125_benford_audit",
-    "x126_neyman_allocation", "x127_removal_effect_attribution",
-    "x128_clustering_coefficient", "x129_fellegi_sunter",
-    "x130_welch_ttest", "x131_power_mde", "x132_rendezvous_sharding",
-    "x133_ks_test", "x134_dp_noised_release",
-    "x135_sequence_perplexity", "x136_diff_in_diff",
-    # round 10 gated these (CORRECTNESS_r10.json) — all green (the
-    # other 44 r10 slots were the r5-stale block + changed/demoted
-    # canaries, all listed above):
-    "x137_ivf_persisted_search", "x138_pq_persisted_codes",
-    "x139_psi_drift", "x140_mann_whitney", "x141_ivf_index_staleness",
-    "x142_conformal_coverage",
-    # round 11 gated these (CORRECTNESS_r11.json) — all green (the
-    # other 49 r11 slots were x140/x141 + the r6-stale block, all
-    # listed above):
-    "x143_mp3_metadata",
-    # round 12 gated these (CORRECTNESS_r12.json) — all green (the
-    # other 48 r12 slots were t1/t2/t3 + x114/x137/x138 + 42 of the
-    # r7-evidence block, all listed above):
-    "x144_mp3_vbr_audit", "x145_t_closeness",
-    # round 13 gated these (CORRECTNESS_r13.json) — all green (the
-    # other 48 r13 slots were the changed-kernel graph four + the r7
-    # stragglers + the full r8-evidence block, all listed above):
-    "x146_mp4_metadata", "x147_id3_tags",
-    # round 14 gated these (CORRECTNESS_r14.json) — all green (the
-    # other 47 r14 slots were x143/x144 repayment + the full
-    # r9-evidence block + 3 r10 pull-forwards, all listed above):
-    "x148_jpeg_exif", "x149_riff_webp", "x150_png_text",
-    # round 15 gated these (CORRECTNESS_r15.json) — all green (the
-    # other 46 r15 slots were x148/x150 repayment + the full
-    # r10-evidence block + 3 r11 pull-forwards, all listed above):
-    "x151_warc_wet", "x152_flac_ogg", "x153_orientation_dedup",
-    "x154_warc_ingest_quality",
-    # round 16 gated its 50 (CORRECTNESS_r16.json) — all green; the
-    # only name not already in a block above is slot 50:
-    "x155_html_extract",
-]
-
-#: Round-17 gate (the driver records the FIRST 50 registered),
-#: exactly the r16 verdict's directive 1 adjusted for its own
-#: arithmetic: the three x156/x157/x158 deferral debts LEAD (the
-#: _DEFER_TO_NEXT_GATE contract's terms — their first driver rows),
-#: then the two changed-kernel repayments this round created
-#: (x151's derived oracle constant, x155's base_href + self-closing
-#: kernel change), then the first 40 of the 48-query r12-evidence
-#: block in CORRECTNESS_r12.json gate order. Sized at 45 so the
-#: FIVE round-17 additions (x159_sitemap_frontier,
-#: x160_crawl_schedule, x161_url_traps, x162_redirect_chains,
-#: x163_domain_budget) land via ``_ungated`` INSIDE the window as
-#: slots 46-50 — directive 4's "every declared query has a driver
-#: row at round close" invariant holds with an EMPTY deferral
-#: list. The 8 unrotated r12-evidence queries
-#: (x89/x90/x91/x93/x94/x95/x96/x145) lead r18.
-#:
-#: ---- retired round-16 rotation comment (kept for the audit trail):
-#: Round-16 gate (the driver records the FIRST 50 registered),
-#: exactly the r15 verdict's directive (item 1) plus this round's
-#: three kernel-change debts, which lead as repayment slots per the
-#: documented policy: w7_session_paths and x53_bigram_pmi (their
-#: global top-k windows were swapped to the x92
-#: ``orderBy().limit(k)``-then-rank idiom — r15 verdict item 2; the
-#: OUTPUT is unchanged and both are locally oracle-exact on the new
-#: plan, but the kernel changed so each owes a driver row) and
-#: x151_warc_wet (its FIXTURE changed — response records now cycle
-#: chunked / gzip+chunked / identity wire encodings, exercising the
-#: new ``Transfer-Encoding: chunked`` dechunking of r15 verdict item
-#: 3). Then the ENTIRE remaining 46-query r11-evidence block (the
-#: freshest=r11 set — the judge-published histogram: the r1-r8-era
-#: gate blocks whose latest driver row is CORRECTNESS_r11) in
-#: CORRECTNESS_r11.json gate order. Sized at 49 — the one freed slot
-#: lets the round-16 addition (x155_html_extract, r15 verdict item
-#: 4) land via ``_ungated`` as slot 50, exactly as x146/x147 (r13),
-#: x148-x150 (r14), and x151-x154 (r15) did. The round's three LATER
-#: additions (x156_url_canonicalize, x157_link_frontier,
-#: x158_robots_gate) follow in ``_ungated`` order as slots 51-53 —
-#: OUTSIDE the 50-slot window: locally oracle-exact in
-#: LOCAL_CORRECTNESS_r16, enumerated in ``_DEFER_TO_NEXT_GATE``
-#: below, owed their first driver row at the head of the r17 gate.
-#: After this gate the oldest driver evidence fleet-wide is r12.
-#:
-#: ---- retired round-15 rotation comment (kept for the audit trail):
-#: Round-15 gate (the driver records the FIRST 50 registered),
-#: exactly the r14 verdict's directive (item 1) plus the two
-#: kernel-change debts this round itself created: lead with
-#: x148_jpeg_exif (its oracle FIXTURE changed — the well-formed
-#: no-Exif JPEG's APP0 length was corrected from the coincidental 18
-#: to the true 16 per ADVICE r14, a byte-level input change) and
-#: x150_png_text (its KERNEL changed — ``png_text_metadata`` now
-#: flips ``clean`` on an unknown zTXt/iTXt compression-method byte,
-#: closing the ADVICE r14 audit-posture gap); both are locally
-#: oracle-exact on the changed binary but owe a driver row under the
-#: demotion-repayment policy (documented for r14 at this spot; this
-#: comment extends the record). Then the ENTIRE 41-query
-#: r10-evidence block (the freshest=r10 set, in CORRECTNESS_r10.json
-#: gate order — the judge-published histogram set), then the first 3
-#: of the 49-query r11-evidence block (CORRECTNESS_r11.json gate
-#: order; the verdict budgeted 9 — 6 are deferred to r16). Note the
-#: r11 pull-forwards lead with x141_ivf_index_staleness, which also
-#: covers this round's ``ensure_ivf_index``→``_ensure`` lifecycle
-#: refactor (behavior-preserving, but the index-lifecycle code path
-#: it executes was touched). Sized at 46 — four freed slots let the
-#: round-15 additions (x151-x154) land via ``_ungated`` as slots
-#: 47-50 exactly as x146/x147 (r13) and x148-x150 (r14) did. After
-#: this gate the oldest driver evidence fleet-wide is r11 (the
-#: remaining 46 r11-evidence queries lead the r16 window).
-_NEWEST = [
-    # round-17 gate, per the r16 verdict directive 1: the three
-    # _DEFER_TO_NEXT_GATE debts LEAD (their first-ever driver rows;
-    # all three also changed THIS round — x156 gained §6.2.2.2
-    # percent normalization, x157 honors <base href> with a grown
-    # fixture, x158 gained the pattern tiebreaker + the Crawl-delay
-    # overflow fix):
-    "x156_url_canonicalize", "x157_link_frontier", "x158_robots_gate",
-    # changed-this-round repayments: x151's oracle constant is now
-    # DERIVED from the runtime zlib (ADVICE r16), x155's kernel
-    # changed (self-closing drop-tag fix + base_href capture):
-    "x151_warc_wet", "x155_html_extract",
-    # the r12-evidence block (freshest driver row = r12; the judge-
-    # published histogram set, 48 names) in CORRECTNESS_r12.json
-    # gate order — the first 43 fit this window; the remaining 5
-    # (x93_pq_adc_topk, x94_ivf_adc_search, x95_hybrid_rrf_fusion,
-    # x96_cdc_apply_latest, x145_t_closeness) keep their r12
-    # evidence and LEAD the r18 rotation. (The verdict's "oldest =
-    # r13" done-condition is arithmetically unreachable: 3 deferral
-    # debts + 48 r12 rows + 2 new queries = 53 > 50; this split
-    # pays every zero-evidence debt first and gates every query
-    # declared this round, per directive 4.)
-    "t1_map_revenue", "t2_filter_shipped", "t3_explode_words",
-    "x114_prefix_filter_jaccard", "x137_ivf_persisted_search",
-    "x138_pq_persisted_codes", "g10_rolling_distinct_users",
-    "g11_quality_deciles", "j10_nonequi_time_join",
-    "q02_min_acctbal_supplier", "q04_order_priority_check",
-    "q05_local_supplier_volume", "q06_forecast_revenue",
-    "q07_volume_shipping", "q09_product_type_profit",
-    "q10_returned_items", "w5_batch_sessionize", "w8_retention_curve",
-    "x10_ann_rerank", "x11_bpe_tokens", "x13_char_ngram_jaccard",
-    "x14_edit_distance", "x15_profile", "x16_embedding_neardup",
-    "x17_winnow_fingerprint", "x18_neardup_clusters",
-    "x19_stratified_sample", "x32_bm25_retrieval",
-    "x33_time_decay_engagement", "x34_domain_mixture_sample",
-    "x35_weighted_sample", "x37_group_topk_sample",
-    "x38_incremental_dedup", "x39_funnel_conversion",
-    "x40_fuzzy_name_match", "x42_minhash_estimate_quality",
-    "x43_temperature_mixture", "x44_source_precedence_dedup",
-    "x45_domain_percent_rank", "x86_bloom_membership",
-]
-
-#: Empty this round (r16 verdict directive 4: land new queries
-#: BEFORE the final gate run). The round-17 additions
-#: (x159_sitemap_frontier, x160_crawl_schedule) land via
-#: ``_ungated`` as slots 49-50 INSIDE the window.
-_DEFER_TO_NEXT_GATE: list[str] = []
-
-_gated = set(_GATED_PRIOR_ROUNDS)
-_new = [n for n in _NEWEST if n in QUERIES]
-_ungated = [n for n in QUERIES if n not in _gated and n not in set(_NEWEST)]
-_rest = [n for n in _GATED_PRIOR_ROUNDS if n in QUERIES and n not in set(_NEWEST)]
-_order = _new + _ungated + _rest
-assert sorted(_order) == sorted(QUERIES), "rotation must be a permutation"
-QUERIES = {n: QUERIES[n] for n in _order}

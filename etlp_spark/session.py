@@ -33,6 +33,8 @@ is chosen to survive a 1000-executor cluster reading ~100 TB:
   call latches it (as false if no session is active yet), and later
   conf changes do not move the latch. So the override only takes
   effect when it is set before the process's first ``functions`` call.
+  It is a static conf: ``get_spark`` raises ``ValueError`` if it is
+  asked for while a session with another value is running.
 
 The reference's parallelism knobs (``:threads``, ``:partitions``
 buffer sizes — e.g. ``src/etlp/connector/core.clj:58``,
@@ -62,6 +64,10 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine's defaults.
+
+    Raises ``ValueError`` naming each ``extra_conf`` key whose live
+    value differs from the one asked for: a static conf cannot change
+    once a session is running, and reusing one would drop it.
 
     ``shuffle_partitions`` defaults to the local core count; on a real
     cluster set it to ~2-3x total executor cores (AQE coalesces the
@@ -99,4 +105,17 @@ def get_spark(
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    # getOrCreate on a live session applies runtime confs but only
+    # warns about static ones, so a static override would be dropped.
+    stale = {
+        k: live
+        for k, v in (extra_conf or {}).items()
+        if (live := spark.conf.get(k, None)) != v
+    }
+    if stale:
+        raise ValueError(
+            "extra_conf keys not in effect on the running session "
+            f"(live values shown): {stale}"
+        )
+    return spark

@@ -39,15 +39,19 @@ by replicating sf0.1 with semantics-preserving perturbations:
   inflates group sizes, not pair counts.
 
 Usage: ``python scale_bench.py [--scales 10,100] [--out FILE]
-[--deep name:scale ...]``. ``--deep x73_bigram_logprob:300`` runs one
-query at an extra scale (generating only the tables that query
-needs) — the cheap way to add a confirmation point for a specific
-plan-flip. Writes one JSON file with per-query seconds at each scale
-plus the time ratio between the two LARGEST scales; superlinear
-ratio = regression. Runs each query twice, keeps the best (first run
-pays Janino compilation); ``--deep`` points run BEST-OF-3 (single
-shots at a cold deep scale read 1.6-2x over warm steady-state — the
-r10 judge audit).
+[--queries LIST] [--deep name:scale ...] [--graph N ...]
+[--graph-queries LIST] [--graph-runs R]``.
+``--deep x73_bigram_logprob:300`` runs one query at an extra scale
+(generating only the tables that query needs) — the cheap way to add
+a confirmation point for a specific plan-flip. ``--graph N`` runs the
+graph family (x92, x100, x107, x128) on a replica-locked events
+corpus at xN (``_gen_graph``), with shuffle partitions sized to the
+corpus; ``--scales ""`` skips the HEAVY sweep. Writes one JSON file
+with per-query seconds at each scale plus the time ratio between the
+two LARGEST scales; superlinear ratio = regression. Runs each query
+twice, keeps the best (first run pays Janino compilation); ``--deep``
+points run BEST-OF-3 (single shots at a cold deep scale read 1.6-2x
+over warm steady-state — the r10 judge audit).
 
 Scale points are all GENERATED directories (32 parquet splits each):
 the raw sf0.1 baseline plans only ~3 input splits per table, so
@@ -367,85 +371,6 @@ def _gen_scale(spark, n: int, tables: list[str]) -> str:
     return out
 
 
-def _gen_zipf(spark, n: int) -> str:
-    """Heavy-tailed documents corpus at x{n} volume (r11 verdict item
-    2): the BASE synthetic corpus has a ~18-word vocabulary, so every
-    text-family scale conclusion (x114 prefix-filter efficacy, x5 LSH
-    band occupancy, x32 BM25, x115 KN-bigram) rests on shingle
-    combinatorics over a toy vocabulary. This generator emits
-    ``n * 5000`` docs over a ZIPF(s=1.1) vocabulary of 100k types
-    (bounded continuous inverse-CDF; top type carries ~10% of tokens
-    — a true stopword), 12-35 tokens/doc, with 10% of docs NEAR-DUPS
-    of their predecessor (one substituted token) so the similarity
-    families have real positives. Everything is a pure function of
-    doc_id (counter-based hashing, no RNG state), so the corpus is
-    deterministic under any partitioning."""
-    out = os.path.join(ROOT, f"zipf_x{n}")
-    marker = os.path.join(out, "_DONE")
-    if os.path.exists(marker):
-        return out
-    total = n * 5000
-
-    def gen(batches):
-        import numpy as np
-        import pandas as pd
-
-        V = 100_000
-        s = 1.1
-        A = (V + 1) ** (1 - s)
-        langs = ("en", "zh", "de", "fr", "es")
-        for pdf in batches:
-            ids = pdf["id"].to_numpy(np.int64)
-            if len(ids) == 0:
-                continue
-            deff = np.where(ids % 10 == 9, ids - 1, ids)
-            L = 12 + (deff % 24)
-            tot = int(L.sum())
-            off = np.zeros(len(ids) + 1, np.int64)
-            off[1:] = np.cumsum(L)
-            drep = np.repeat(deff.astype(np.uint64), L)
-            irep = (np.arange(tot, dtype=np.int64)
-                    - np.repeat(off[:-1], L)).astype(np.uint64)
-            mask = np.uint64(0xFFFFFFFF)
-            h = ((drep * np.uint64(1_000_003) + irep)
-                 * np.uint64(2654435761)) & mask
-            h ^= h >> np.uint64(13)
-            h = (h * np.uint64(0x5BD1E995)) & mask
-            h ^= h >> np.uint64(15)
-            u = h.astype(np.float64) / 2.0**32
-            x = (1.0 - (1.0 - A) * u) ** (1.0 / (1.0 - s))
-            rank = np.clip(x.astype(np.int64), 1, V)
-            texts = []
-            for j in range(len(ids)):
-                words = [f"w{r}" for r in rank[off[j]:off[j + 1]]]
-                d = int(ids[j])
-                if d % 10 == 9:  # near-dup: ONE token substituted
-                    p = d % len(words)
-                    words[p] = f"w{1 + (d * 2654435761) % V}"
-                texts.append(" ".join(words))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "text": texts,
-                    "lang": [langs[int(d) % 5] for d in ids],
-                    "source": [f"src{int(d) % 5}" for d in ids],
-                    "n_chars": [len(t) for t in texts],
-                }
-            )
-
-    df = spark.range(total, numPartitions=32).mapInPandas(
-        gen,
-        "doc_id bigint, text string, lang string, source string, "
-        "n_chars bigint",
-    )
-    df.repartition(32).write.mode("overwrite").parquet(
-        f"{out}/documents.parquet"
-    )
-    with open(marker, "w") as fh:
-        fh.write("ok\n")
-    return out
-
-
 def _gen_graph(spark, n: int) -> str:
     """Replica-LOCKED bucket-key events corpus at x{n} volume (r12
     verdict item 2): the standard replica recipe offsets event_id/
@@ -485,476 +410,6 @@ def _gen_graph(spark, n: int) -> str:
     )
     with open(marker, "w") as fh:
         fh.write("ok\n")
-    return out
-
-
-def _graph_diagnostics(spark, sf_dir: str) -> dict:
-    """EXECUTED bucket/edge counts for the graph family's exact
-    construction ((event_type, hour) buckets, 2..32 survivors,
-    min_shared=3 pair threshold) — the numbers that decide whether a
-    deep point measured pair expansion or an empty graph."""
-    from etlp_spark.functions.graph import cooccurrence_edges
-    from etlp_spark.io import load_table
-
-    ev = load_table(spark, sf_dir, "events")
-    pres = ev.select(
-        "event_type", F.date_trunc("hour", "ts").alias("hb"), "user_id"
-    ).distinct()
-    sizes = pres.groupBy("event_type", "hb").agg(
-        F.count(F.lit(1)).alias("sz")
-    )
-    row = sizes.agg(
-        F.count(F.lit(1)).alias("nb"),
-        F.max("sz").alias("mx"),
-        F.expr("percentile(sz, array(0.5, 0.99))").alias("q"),
-        F.sum(
-            F.when((F.col("sz") >= 2) & (F.col("sz") <= 32), 1).otherwise(0)
-        ).alias("surv"),
-        F.sum(F.when(F.col("sz") > 32, 1).otherwise(0)).alias("over"),
-    ).first()
-    edges = cooccurrence_edges(
-        pres, "user_id", ("event_type", "hb"), min_shared=3, max_bucket=32
-    )
-    n_edges = edges.count()
-    return dict(
-        buckets=row.nb, bucket_max=row.mx, bucket_p50=row.q[0],
-        bucket_p99=row.q[1], surviving_buckets=row.surv,
-        buckets_over_cap=row.over, edges=n_edges,
-    )
-
-
-def _kcore_cadence_study(
-    spark, sf_dir: str, cadences=(1, 2, 3), runs: int = 3
-) -> dict:
-    """x100's full pipeline (edge construction + 3 peel rounds +
-    degree report) timed at each localCheckpoint cadence (r12
-    verdict item 3: the x1000 k-core cost was checkpoint-I/O-bound
-    and heap-insensitive — 16.5 s at 64g while its siblings dropped
-    to ~7 s). Cadence 1 is the shipped per-round default; cadence 3
-    checkpoints only after the final round. Results are
-    cadence-invariant (pytest-pinned), so this is a pure
-    I/O-vs-recompute trade measurement. Best-of-3 per cadence, same
-    session."""
-    from etlp_spark.functions.graph import cooccurrence_edges, degrees, kcore
-    from etlp_spark.io import load_table
-
-    out: dict = {}
-    for cad in cadences:
-        times = []
-        for _ in range(runs):
-            t0 = time.time()
-            ev = load_table(spark, sf_dir, "events")
-            pres = ev.select(
-                "event_type",
-                F.date_trunc("hour", "ts").alias("hb"),
-                "user_id",
-            )
-            edges = cooccurrence_edges(
-                pres, "user_id", ("event_type", "hb"),
-                min_shared=3, max_bucket=32,
-            )
-            core = kcore(edges, k=3, rounds=3, checkpoint_every=cad)
-            degrees(core).write.format("noop").mode("overwrite").save()
-            times.append(time.time() - t0)
-        out[f"cadence_{cad}"] = round(min(times), 3)
-        print(f"kcore cadence={cad}: {['%.2f' % t for t in times]}",
-              flush=True)
-    return out
-
-
-def _gen_mog(spark, n: int) -> str:
-    """Mixture-of-Gaussians embeddings corpus at x{n} volume (r12
-    verdict item 7): the replicated corpus inherits the synthetic
-    base's near-uniform cluster structure, so the IVF family's
-    occupancy numbers never see realistic cluster IMBALANCE. This
-    generator emits ``n * 2000`` 64-d vectors from 12 Gaussian
-    clusters with ZIPF(s=1.2) mixing weights (top cluster ~26% of
-    rows, smallest ~2%), sigma 0.12 around centers drawn uniform in
-    [-0.6, 0.6]^64. Everything is a pure function of vec_id
-    (counter-based hashing, no RNG state — the zipf-corpus
-    discipline), so the corpus is deterministic under any
-    partitioning. ``label`` carries the true component."""
-    out = os.path.join(ROOT, f"mog_x{n}")
-    marker = os.path.join(out, "_COMPLETE_embeddings")
-    if os.path.exists(marker):
-        return out
-    os.makedirs(out, exist_ok=True)
-    total = n * 2000
-
-    def gen(batches):
-        import numpy as np
-        import pandas as pd
-
-        K, D, S = 12, 64, 1.2
-        mask = np.uint64(0xFFFFFFFF)
-
-        def h01(x):  # counter hash -> uniform [0, 1)
-            x = (x * np.uint64(2654435761)) & mask
-            x ^= x >> np.uint64(13)
-            x = (x * np.uint64(0x5BD1E995)) & mask
-            x ^= x >> np.uint64(15)
-            return x.astype(np.float64) / 2.0**32
-
-        w = 1.0 / (1.0 + np.arange(K)) ** S
-        cumw = np.cumsum(w / w.sum())
-        kd = np.arange(K * D, dtype=np.uint64)
-        centers = (1.2 * (h01(kd * np.uint64(1_000_003)
-                               + np.uint64(7)) - 0.5)).reshape(K, D)
-        for pdf in batches:
-            ids = pdf["id"].to_numpy(np.int64)
-            if len(ids) == 0:
-                continue
-            u = h01(ids.astype(np.uint64) * np.uint64(11400714819323198485))
-            comp = np.searchsorted(cumw, u).clip(0, K - 1)
-            base = (ids.astype(np.uint64)[:, None] * np.uint64(97)
-                    + np.arange(D, dtype=np.uint64)[None, :])
-            u1 = np.maximum(h01(base * np.uint64(31)), 1e-12)
-            u2 = h01(base * np.uint64(37) + np.uint64(1))
-            z = np.sqrt(-2.0 * np.log(u1)) * np.cos(2.0 * np.pi * u2)
-            vecs = (centers[comp] + 0.12 * z).astype(np.float32)
-            yield pd.DataFrame(
-                {
-                    "vec_id": ids,
-                    "embedding": list(vecs),
-                    "label": comp.astype(np.int32),
-                }
-            )
-
-    df = spark.range(total, numPartitions=32).mapInPandas(
-        gen, "vec_id bigint, embedding array<float>, label int"
-    )
-    df.repartition(32).write.mode("overwrite").parquet(
-        f"{out}/embeddings.parquet"
-    )
-    with open(marker, "w") as fh:
-        fh.write("ok\n")
-    return out
-
-
-def _mog_diagnostics(spark, sf_dir: str) -> dict:
-    """IVF probe-skew numbers under realistic cluster imbalance (r12
-    verdict item 7): train x12's exact quantizer (k=8, 2 Lloyd
-    rounds, 1-in-10 sample) on the corpus, then record (a) cell
-    occupancy (max/p50/p99 + top-cell corpus share) and (b) the
-    probe-count distribution over a 64-query deterministic sample —
-    how many distinct cells the fleet of queries probes and what
-    fraction of the corpus a query's n_probe=2 scan touches at
-    p50/p99/max. The scanned-share numbers are the 'does a fat cell
-    need salting' verdict: under a cell-pruned layout a probe scans
-    whole cells, so top-cell share IS the worst-case per-query scan
-    fraction. A second quantizer at k=32 (same recipe otherwise)
-    records whether centroid-count scaling — the standard IVF
-    answer, k ~ sqrt(N) — dissolves the fat cell or whether the
-    imbalance is intrinsic and needs cell splitting at ingest."""
-    from etlp_spark.functions.similarity import (
-        ivf_assign,
-        ivf_probe_cells,
-        ivf_train,
-    )
-    from etlp_spark.io import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings").persist()
-    n = emb.count()
-    centroids = ivf_train(emb.where(F.col("vec_id") % 10 == 0), k=8, iters=2)
-    occ = {
-        r.cell: r.n
-        for r in ivf_assign(emb, centroids)
-        .groupBy("cell").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    sizes = sorted(occ.values(), reverse=True)
-    qvecs = [
-        [float(x) for x in r.embedding]
-        for r in emb.where(F.col("vec_id") % (max(n // 64, 1)) == 0)
-        .orderBy("vec_id").limit(64).select("embedding").collect()
-    ]
-    # k-scaling comparison: same recipe at k=32 — does the fat cell
-    # dissolve when the centroid count grows with the corpus?
-    c32 = ivf_train(emb.where(F.col("vec_id") % 10 == 0), k=32, iters=2)
-    s32 = sorted(
-        (
-            r.n
-            for r in ivf_assign(emb, c32)
-            .groupBy("cell").agg(F.count(F.lit(1)).alias("n")).collect()
-        ),
-        reverse=True,
-    )
-    k32 = dict(
-        cells_nonempty=len(s32),
-        cell_max=s32[0],
-        cell_p50=s32[len(s32) // 2],
-        top_cell_share_e6=int(s32[0] * 1_000_000 // max(n, 1)),
-    )
-    emb.unpersist()
-    scanned = []
-    probed_cells: set = set()
-    for qv in qvecs:
-        cells = ivf_probe_cells(centroids, qv, n_probe=2)
-        probed_cells.update(cells)
-        scanned.append(sum(occ.get(c, 0) for c in cells))
-    scanned.sort()
-
-    def share_e6(x: int) -> int:
-        return int(x * 1_000_000 // max(n, 1))
-
-    return dict(
-        n_vectors=n,
-        cells_nonempty=len(sizes),
-        cell_max=sizes[0],
-        cell_p50=sizes[len(sizes) // 2],
-        cell_min=sizes[-1],
-        top_cell_share_e6=share_e6(sizes[0]),
-        queries_sampled=len(qvecs),
-        distinct_cells_probed=len(probed_cells),
-        scan_share_p50_e6=share_e6(scanned[len(scanned) // 2]),
-        scan_share_p99_e6=share_e6(
-            scanned[min(len(scanned) - 1, int(len(scanned) * 0.99))]
-        ),
-        scan_share_max_e6=share_e6(scanned[-1]),
-        k32=k32,
-    )
-
-
-def _gen_warc_segments(n_files: int, recs_per_file: int = 20) -> str:
-    """Synthetic .warc / .warc.gz segment directory for the
-    streaming-source throughput study (r16 verdict item 5) — cached
-    under .scale_data/ with the _DONE marker like every other
-    corpus. A third of the files use the gzip-member wire layout, a
-    third carry chunked/gzip-encoded HTTP responses, so the measured
-    per-file cost includes the dechunk+inflate path, not just header
-    walks."""
-    from etlp_spark.functions.warc import encode_warc
-
-    out = os.path.join(ROOT, f"warc_stream_{n_files}x{recs_per_file}")
-    done = os.path.join(out, "_DONE")
-    if os.path.exists(done):
-        return out
-    os.makedirs(out, exist_ok=True)
-    for f in range(n_files):
-        recs = [
-            {
-                "warc_type": "warcinfo",
-                "record_id": f"<urn:seg:{f}>",
-                "body": b"software: etlp-spark\r\n",
-            }
-        ]
-        for i in range(recs_per_file - 1):
-            if (f + i) % 3 == 0:
-                recs.append({
-                    "warc_type": "response",
-                    "record_id": f"<urn:rec:{f}-{i}>",
-                    "target_uri": f"https://example.org/{f}/{i}",
-                    "http": {
-                        "content_type": "text/html",
-                        "body": f"<html>seg {f} rec {i} "
-                                + "word " * (20 + i % 13)
-                                + "</html>",
-                        "gzip": i % 2 == 0,
-                        "chunked": True,
-                    },
-                })
-            else:
-                recs.append({
-                    "warc_type": "conversion",
-                    "record_id": f"<urn:rec:{f}-{i}>",
-                    "target_uri": f"https://example.org/{f}/{i}",
-                    "body": (f"txt {f} {i} " * (10 + i % 7)).encode(),
-                })
-        payload = encode_warc(recs, gzip_members=f % 3 == 0)
-        ext = "warc.gz" if f % 3 == 0 else "warc"
-        with open(os.path.join(out, f"seg-{f:05d}.{ext}"), "wb") as fh:
-            fh.write(payload)
-    with open(done, "w") as fh:
-        fh.write("ok\n")
-    return out
-
-
-def _warc_stream_study(
-    spark, seg_dir: str, triggers: "tuple[int, ...]" = (4, 16, 64)
-) -> dict:
-    """Drain the segment backlog through ``read_warc_stream`` once
-    per ``maxFilesPerTrigger`` knob (availableNow trigger: the
-    source chews the whole directory in batches of K files, exactly
-    the backlog posture) into a noop sink, and record wall seconds,
-    files/sec, rows, and batch count — so the backpressure knob's
-    effect is MEASURED, not asserted. A batch ``read_warc`` pass
-    over the same directory is the zero-trigger-overhead
-    reference."""
-    import glob as _glob
-    import shutil
-    import tempfile
-
-    from etlp_spark.functions.warc import read_warc, read_warc_stream
-
-    n_files = len(_glob.glob(os.path.join(seg_dir, "seg-*")))
-    out: dict = {"n_files": n_files}
-    for k in triggers:
-        ckpt = tempfile.mkdtemp(prefix="warc_stream_ckpt_")
-        rows = read_warc_stream(
-            spark, os.path.join(seg_dir, "seg-*"),
-            max_files_per_trigger=k,
-        )
-        t0 = time.time()
-        q = (
-            rows.writeStream.format("noop")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        wall = time.time() - t0
-        progress = q.recentProgress
-        # numInputRows is SOURCE rows = files for binaryFile (the
-        # record explosion happens downstream of the source metric);
-        # it cross-checks file accounting, not record counts.
-        # CAVEAT: recentProgress retains only the LAST ~100 batches
-        # (spark.sql.streaming.numRecentProgressUpdates), so with
-        # >100 micro-batches this undercounts and `batches` reads
-        # ~100; files/sec is wall-clock based and unaffected
-        n_src = sum(int(p["numInputRows"]) for p in progress)
-        out[f"mft_{k}"] = {
-            "sec": round(wall, 3),
-            "files_per_sec": round(n_files / wall, 2),
-            "source_file_rows": n_src,
-            "batches": len(progress),
-        }
-        shutil.rmtree(ckpt, ignore_errors=True)
-        print(f"warc_stream mft={k}: {wall:.2f}s "
-              f"({n_files / wall:.1f} files/s, {n_src} files seen, "
-              f"{len(progress)} batches)", flush=True)
-    t0 = time.time()
-    n_batch_rows = read_warc(
-        spark, os.path.join(seg_dir, "seg-*")
-    ).count()
-    wall = time.time() - t0
-    out["batch_reference"] = {
-        "sec": round(wall, 3),
-        "files_per_sec": round(n_files / wall, 2),
-        "rows": n_batch_rows,
-    }
-    print(f"warc_stream batch ref: {wall:.2f}s "
-          f"({n_files / wall:.1f} files/s, {n_batch_rows} rows)",
-          flush=True)
-    return out
-
-
-def _corpus_diagnostics(spark, sf_dir: str) -> dict:
-    """The distributions the text-family filters' efficacy rides on,
-    EXECUTED (not assumed) over a corpus: token/shingle frequency
-    quantiles, x114's naive-vs-prefix candidate-pair volumes (its
-    exact shingle-fingerprint + rarest-first-prefix construction),
-    and x5's LSH band-bucket occupancy (its exact 16x4 banding).
-    Run on both the replicated base corpus and the Zipf variant, the
-    deltas say whether the 100 TB claims transfer to a realistic
-    vocabulary."""
-    from etlp_spark.functions.dedup import minhash_signature, word_shingles
-    from etlp_spark.io import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    out: dict = {"n_docs": docs.count()}
-
-    toks = docs.select(
-        F.explode(F.split(F.lower(F.col("text")), " ")).alias("w")
-    ).where(F.col("w") != "")
-    tf = toks.groupBy("w").agg(F.count(F.lit(1)).alias("f")).persist()
-    row = tf.agg(
-        F.count(F.lit(1)).alias("vocab"),
-        F.sum("f").alias("tokens"),
-        F.max("f").alias("max_df"),
-        F.expr("percentile(f, array(0.5, 0.9, 0.99))").alias("q"),
-    ).first()
-    out.update(
-        vocab=row.vocab, tokens=row.tokens, token_max_df=row.max_df,
-        token_df_p50=row.q[0], token_df_p90=row.q[1],
-        token_df_p99=row.q[2],
-        top_token_share_e6=int(row.max_df * 1_000_000 // row.tokens),
-    )
-    tf.unpersist()
-
-    # x114's exact construction: 3-gram shingle fingerprints, rarest-
-    # first rank, prefix size n - ceil(0.8n) + 1. The two pair-volume
-    # sums ARE the join costs: naive = sum f^2-ish over all shingle
-    # occurrences, prefix = same sum over prefix occurrences only.
-    tk = docs.select(
-        "doc_id",
-        F.transform(
-            word_shingles("text", 3),
-            lambda sh: F.conv(F.substring(F.md5(sh), 1, 15), 16, 10).cast(
-                "long"
-            ),
-        ).alias("tk"),
-    ).where(F.size("tk") >= 1).localCheckpoint(eager=True)
-    dt = tk.select(
-        "doc_id", F.size("tk").alias("n"), F.explode("tk").alias("t")
-    )
-    freq = dt.groupBy("t").agg(F.count(F.lit(1)).alias("f")).persist()
-    srow = freq.agg(
-        F.count(F.lit(1)).alias("v"),
-        F.max("f").alias("mx"),
-        F.sum(F.col("f") * (F.col("f") - 1) / 2).alias("pairs"),
-    ).first()
-    out.update(
-        shingle_vocab=srow.v, shingle_max_df=srow.mx,
-        naive_pair_volume=int(srow.pairs),
-    )
-    from pyspark.sql import Window as _W
-
-    wd = _W.partitionBy("doc_id").orderBy("f", "t")
-    ranked = dt.join(freq, "t").select(
-        "doc_id", "t", F.row_number().over(wd).alias("rk"), "n"
-    )
-    prefix = ranked.where(
-        F.col("rk") <= F.col("n") - F.expr("(4 * n + 4) div 5") + 1
-    )
-    pf = prefix.groupBy("t").agg(F.count(F.lit(1)).alias("f"))
-    prow = pf.agg(
-        F.max("f").alias("mx"),
-        F.sum(F.col("f") * (F.col("f") - 1) / 2).alias("pairs"),
-    ).first()
-    freq.unpersist()
-    out.update(
-        prefix_max_df=prow.mx,
-        prefix_pair_volume=int(prow.pairs or 0),
-        prefix_filter_ratio_e6=int(
-            (prow.pairs or 0) * 1_000_000 // max(int(srow.pairs), 1)
-        ),
-    )
-
-    # x5's exact banding (k=16, 4 bands): bucket occupancy + how many
-    # buckets the max_bucket=50 cap drops, and the kept pair fan-out.
-    sig = minhash_signature(docs)
-    rows_per = 16 // 4
-    band_keys = F.array(
-        *[
-            F.md5(
-                F.concat_ws(
-                    "|", F.lit(str(b)),
-                    *[F.col(f"sig_{b * rows_per + r}").cast("string")
-                      for r in range(rows_per)],
-                )
-            )
-            for b in range(4)
-        ]
-    )
-    buckets = (
-        sig.select(F.explode(band_keys).alias("bucket"))
-        .groupBy("bucket").agg(F.count(F.lit(1)).alias("sz"))
-    )
-    brow = buckets.agg(
-        F.count(F.lit(1)).alias("nb"),
-        F.max("sz").alias("mx"),
-        F.expr("percentile(sz, array(0.5, 0.99))").alias("q"),
-        F.sum(F.when(F.col("sz") > 50, 1).otherwise(0)).alias("over"),
-        F.sum(
-            F.when(F.col("sz") <= 50,
-                   F.col("sz") * (F.col("sz") - 1) / 2).otherwise(0)
-        ).alias("kept_pairs"),
-    ).first()
-    out.update(
-        lsh_buckets=brow.nb, bucket_max=brow.mx,
-        bucket_p50=brow.q[0], bucket_p99=brow.q[1],
-        buckets_over_cap=brow.over,
-        lsh_kept_pair_volume=int(brow.kept_pairs or 0),
-    )
     return out
 
 
@@ -998,7 +453,7 @@ def _time_query(
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--scales", default="10,100")
-    ap.add_argument("--out", default="SCALE_BENCH_r06.json")
+    ap.add_argument("--out", default="SCALE_BENCH.json")
     ap.add_argument(
         "--deep", action="append", default=[],
         metavar="QUERY:SCALE",
@@ -1014,49 +469,16 @@ def main() -> None:
         "without the full family)",
     )
     ap.add_argument(
-        "--zipf", type=int, default=None, metavar="N",
-        help="generate the Zipf-vocabulary documents corpus at xN "
-        "volume, run the text family against it (keys zipf_xN), and "
-        "record corpus diagnostics for BOTH the zipf and replicated "
-        "corpora (r11 verdict item 2)",
-    )
-    ap.add_argument(
         "--graph", action="append", type=int, default=[], metavar="N",
         help="generate the replica-locked bucket-key events corpus "
-        "at xN volume, run the graph family against it (keys "
-        "graph_xN) with executed bucket/edge diagnostics, and run "
-        "the k-core checkpoint-cadence study (r12 verdict items "
-        "2+3); repeatable",
+        "at xN volume and run the graph family against it (keys "
+        "graph_xN); repeatable",
     )
     ap.add_argument(
         "--graph-runs", type=int, default=3, metavar="R",
         help="repetitions per (query, scale) cell in the --graph "
-        "loop and the cadence study (best-of-R; lower it at x1000 "
-        "where one x92 run costs ~12 min)",
-    )
-    ap.add_argument(
-        "--cadences", default="1,2,3", metavar="LIST",
-        help="comma list of k-core checkpoint cadences to study",
-    )
-    ap.add_argument(
-        "--cadence-scales", default=None, metavar="LIST",
-        help="run the cadence study only at these --graph scales "
-        "(default: all) — deep un-checkpointed lineages can OOM the "
-        "local JVM, and the study is a one-scale comparison anyway",
-    )
-    ap.add_argument(
-        "--warc-stream", type=int, default=None, metavar="N",
-        help="generate N synthetic .warc/.warc.gz segments and "
-        "drain them through read_warc_stream once per "
-        "maxFilesPerTrigger in {4,16,64} (availableNow backlog "
-        "posture, noop sink), recording files/sec per knob plus a "
-        "batch read_warc reference (r16 verdict item 5)",
-    )
-    ap.add_argument(
-        "--mog", type=int, default=None, metavar="N",
-        help="generate the mixture-of-Gaussians embeddings corpus "
-        "at xN volume, run the IVF family against it (keys mog_xN), "
-        "and record IVF probe-skew diagnostics (r12 verdict item 7)",
+        "loop (best-of-R; lower it at x1000 where one x92 run costs "
+        "~12 min)",
     )
     args = ap.parse_args()
     scales = [int(s) for s in args.scales.split(",")] if args.scales else []
@@ -1075,8 +497,7 @@ def main() -> None:
     # (query, scale) cell records WHICH harness session measured it,
     # so two-session discrepancies (x114's 25.3 vs 31.6 s at x100 in
     # r11) are machine-readable in the merged artifact instead of
-    # PERF.md prose. One run_id per scale_bench invocation; merge
-    # tooling unions the provenance dict alongside the times.
+    # PERF.md prose. One run_id per scale_bench invocation.
     run_id = f"{time.strftime('%Y%m%dT%H%M%S')}.{os.getpid()}"
     result: dict = {
         "base_sf": 0.1,
@@ -1126,37 +547,6 @@ def main() -> None:
         record(name, n, best)
         print(f"x{n} {name} (deep): first={first:.2f}s best={best:.2f}s", flush=True)
 
-    if args.zipf:
-        zn = args.zipf
-        zdir = _gen_zipf(spark, zn)
-        # default: the four queries the r11 verdict named; an explicit
-        # --queries list widens the zipf sweep to any documents-only
-        # query (the zipf dir materializes no other table)
-        if args.queries is None:
-            text_family = [
-                "x114_prefix_filter_jaccard", "x5_minhash_lsh",
-                "x32_bm25_retrieval", "x115_kneser_ney_bigram",
-            ]
-        else:
-            text_family = [
-                q for q in queries
-                if QUERY_TABLES.get(q) == ["documents"]
-            ]
-        for name in text_family:
-            # zipf points are deep-style: best-of-3 on a cold corpus
-            first, best = _time_query(spark, qs, name, zdir, runs=3)
-            result["queries"].setdefault(name, {})[f"zipf_x{zn}"] = round(
-                best, 3
-            )
-            result["provenance"].setdefault(name, {})[f"zipf_x{zn}"] = run_id
-            print(f"zipf_x{zn} {name}: first={first:.2f}s best={best:.2f}s",
-                  flush=True)
-        diags = {f"zipf_x{zn}": _corpus_diagnostics(spark, zdir)}
-        base_dir = os.path.join(ROOT, f"x{zn}")
-        if os.path.exists(os.path.join(base_dir, "_DONE")):
-            diags[f"x{zn}"] = _corpus_diagnostics(spark, base_dir)
-        result["diagnostics"] = diags
-
     graph_family = [
         "x92_cooccurrence_triangles", "x100_kcore_membership",
         "x107_pagerank_topk", "x128_clustering_coefficient",
@@ -1168,11 +558,6 @@ def main() -> None:
         # r14 x92 question)
         graph_family = [q for q in graph_family if q in
                         set(args.graph_queries.split(","))]
-    cadences = tuple(int(c) for c in args.cadences.split(","))
-    cadence_scales = (
-        {int(s) for s in args.cadence_scales.split(",")}
-        if args.cadence_scales else set(args.graph)
-    )
     for gn in args.graph:
         gdir = _gen_graph(spark, gn)
         key = f"graph_x{gn}"
@@ -1202,76 +587,10 @@ def main() -> None:
             print(f"{key} {name}: first={first:.2f}s best={best:.2f}s "
                   f"(shuffle.partitions={parts})",
                   flush=True)
-        diags = result.setdefault("diagnostics", {})
-        diags[key] = _graph_diagnostics(spark, gdir)
-        diags[key]["shuffle_partitions"] = parts
-        # gate-scale density reference: the same executed counts on
-        # raw sf0.1 — surviving buckets per replica should match it
-        # by construction (the corpus's whole point)
-        diags.setdefault("graph_base_sf0.1", _graph_diagnostics(spark, BASE))
+        result.setdefault("diagnostics", {})[key] = {
+            "shuffle_partitions": parts
+        }
         dump()
-        print(f"{key} diagnostics: {diags[key]}", flush=True)
-    # Cadence studies LAST: an executor OOM under a deep
-    # un-checkpointed lineage kills the whole local JVM
-    # (SparkUncaughtExceptionHandler exits on OOM — the r13 x300
-    # cadence=2 run died exactly this way at 24g), so every
-    # query/diagnostic cell must already be on disk before the
-    # first risky cadence cell runs.
-    for gn in args.graph:
-        if gn not in cadence_scales:
-            continue
-        key = f"graph_x{gn}"
-        # same data-sized partitions as the timed graph cells above
-        spark.conf.set("spark.sql.shuffle.partitions", str(max(
-            int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
-            gn * GRAPH_EDGES_PER_REPLICA // GRAPH_EDGES_PER_PARTITION,
-        )))
-        diags = result.setdefault("diagnostics", {})
-        diags.setdefault(key, {})["kcore_cadence"] = _kcore_cadence_study(
-            spark, _gen_graph(spark, gn), cadences=cadences,
-            runs=args.graph_runs,
-        )
-        dump()
-        print(f"{key} kcore_cadence: {diags[key]['kcore_cadence']}",
-              flush=True)
-    if args.graph:
-        # graph sections done: restore the session default so the mog
-        # family (model-sized aggregates) isn't over-partitioned
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            os.environ.get("SPARK_GRAFT_CPUS", "32"),
-        )
-
-    if args.warc_stream:
-        wn = args.warc_stream
-        wdir = _gen_warc_segments(wn)
-        diags = result.setdefault("diagnostics", {})
-        diags[f"warc_stream_{wn}"] = _warc_stream_study(spark, wdir)
-        dump()
-
-    if args.mog:
-        mn = args.mog
-        mdir = _gen_mog(spark, mn)
-        key = f"mog_x{mn}"
-        for name in [
-            "x12_ivf_ann", "x94_ivf_adc_search",
-            "x137_ivf_persisted_search", "x141_ivf_index_staleness",
-        ]:
-            first, best = _time_query(spark, qs, name, mdir, runs=3)
-            result["queries"].setdefault(name, {})[key] = round(best, 3)
-            result["provenance"].setdefault(name, {})[key] = run_id
-            dump()
-            print(f"{key} {name}: first={first:.2f}s best={best:.2f}s",
-                  flush=True)
-        diags = result.setdefault("diagnostics", {})
-        diags[key] = _mog_diagnostics(spark, mdir)
-        dump()
-        # the replicated corpus's skew numbers for comparison, if its
-        # embeddings were already materialized this or a prior session
-        base_dir = os.path.join(ROOT, f"x{mn}")
-        if os.path.exists(os.path.join(base_dir, "_COMPLETE_embeddings")):
-            diags[f"x{mn}_ivf"] = _mog_diagnostics(spark, base_dir)
-        print(f"{key} diagnostics: {diags[key]}", flush=True)
 
     if len(scales) >= 2:
         lo, hi = f"x{scales[0]}", f"x{scales[-1]}"

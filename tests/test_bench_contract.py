@@ -60,44 +60,6 @@ def test_bench_rejects_unknown_subset_names():
     assert "unknown query names" in proc.stderr
 
 
-def test_gate_window_rotation_invariants():
-    """The driver's correctness gate records the FIRST 50 registered
-    queries. Pin the rotation contract so a future edit can't
-    silently push a priority or never-gated query out of the window:
-    every _NEWEST entry (changed/stale-evidence priorities) must sit
-    inside the first 50, and every query absent from
-    _GATED_PRIOR_ROUNDS (new, no driver evidence yet) must sit
-    inside the first 50 UNLESS it is explicitly enumerated in
-    _DEFER_TO_NEXT_GATE — the documented deferral list for rounds
-    whose window arithmetic is fully committed; deferred entries must
-    be ungated (deferring an already-gated name would be a stale-
-    evidence loophole, not a deferral) and must land DIRECTLY after
-    the window so they lead the next rotation's debt."""
-    import etlp_spark.queries as Q
-
-    names = list(Q.QUERIES)
-    window = set(names[:50])
-    missing_priority = [n for n in Q._NEWEST if n in Q.QUERIES and n not in window]
-    assert not missing_priority, (
-        f"priority queries fell out of the 50-slot gate window: {missing_priority}"
-    )
-    gated_ever = set(Q._GATED_PRIOR_ROUNDS)
-    deferred = list(Q._DEFER_TO_NEXT_GATE)
-    assert not (set(deferred) & gated_ever), (
-        "deferral list may only hold never-gated queries"
-    )
-    never_gated = [n for n in names if n not in gated_ever]
-    out = [n for n in never_gated if n not in window and n not in deferred]
-    assert not out, (
-        "queries with NO driver evidence are outside the gate window "
-        f"and not in the documented deferral list: {out}"
-    )
-    # deferred queries sit immediately after the window (slots 51+),
-    # first in line for the next rotation
-    assert names[50:50 + len(deferred)] == deferred
-    assert len(names) == len(set(names))
-
-
 def test_entry_leaves_no_cached_relations(spark):
     """entry() must not leak SQL-cache entries into a long-lived
     session (PERF.md r18 cache-lifetime posture): after running the

@@ -1,8 +1,8 @@
 """Fleet-wide plan linter: global physical-plan invariants over EVERY
-declared query, executed (so AQE's final strategy is what's linted).
+declared query, read from the query's executed, final plan.
 
 The per-query pins in test_plan_shapes.py guard specific known-risky
-shapes; this linter guards the whole fleet against the three plan
+shapes; this linter guards the whole fleet against the plan
 pathologies that sink a 100 TB run no matter which query they appear
 in:
 
@@ -16,12 +16,18 @@ in:
 - ``rangepartitioning`` — a corpus-wide global sort (top-k must plan
   TakeOrderedAndProject; percentile-ish work runs on compact
   histograms). Zero today at the lint SF.
+- an unbounded window fed by ``Exchange SinglePartition`` (below).
 
-One test, all queries, every violation reported at once — adding a
-query that regresses any invariant fails loudly with its name.
+The fleet-wide check runs inside ``test_query_matches_oracle``
+(tests/test_queries_oracle.py), one case per query, on the same
+DataFrame the oracle comparison collects. That collect finalises the
+frame's own adaptive plan, so the lint reads
+``AdaptiveSparkPlan isFinalPlan=true`` (asserted there): the
+``FORBIDDEN`` names are matched against its tree string, which holds
+the final plan and, where AQE changed it, the initial plan too; the
+window walk descends the final plan's query stages. This module keeps
+the lists, the window detector and the detector's own test.
 """
-
-from etlp_spark.queries import QUERIES
 
 SF = "/root/testdata/sf0.001"
 
@@ -139,31 +145,6 @@ WINDOW_SINGLE_PARTITION_ALLOWED: dict[str, str] = {
         "midranks are computed over the same per-length histogram "
         "as x133 — |distinct lengths| rows, domain-bounded",
 }
-
-
-def test_no_forbidden_plan_nodes_anywhere(spark):
-    violations: dict[str, list[str]] = {}
-    for name, q in QUERIES.items():
-        df = q.fn(spark, SF)
-        df.write.format("noop").mode("overwrite").save()
-        exe = df._jdf.queryExecution().executedPlan()
-        plan = exe.toString()
-        bad = [
-            n for n in FORBIDDEN
-            if n in plan and n not in ALLOWED.get(name, set())
-        ]
-        if name not in WINDOW_SINGLE_PARTITION_ALLOWED:
-            bad += [
-                f"SinglePartition-fed {w}"
-                for w in unbounded_single_partition_windows(exe)
-            ]
-        if bad:
-            violations[name] = bad
-    assert not violations, (
-        "queries grew forbidden plan nodes (quadratic expansion, "
-        "row-Python, global sort, or an unbounded single-partition "
-        f"window): {violations}"
-    )
 
 
 def test_single_partition_window_detector_fires(spark):

@@ -1,57 +1,25 @@
 """Regression gate for the duplicate-corpus-pass class (r17/r18
-optimization rounds): every declared query's final physical plan must
-not scan any table MORE times than the checked-in census
+optimization rounds): every declared query's physical plan must not
+scan any table MORE times than the checked-in census
 (SCAN_CENSUS.json) records. A rewrite that accidentally duplicates a
 corpus subtree (unpinned frame referenced twice, union of selects over
 an unpinned pipeline, broadcast side defeating ReusedExchange) shows
-up here as an extra Scan parquet node and fails with the offending
-query + table named.
+up as an extra Scan parquet node and fails with the offending query
+and table named.
 
-The census counts the FINAL plan only — construct-time pin jobs are
-covered by their own plan-shape tests. Regenerate the allowlist after
-an intentional change with:  python tools_scan_census.py
+The fleet-wide check runs inside ``test_query_matches_oracle``
+(tests/test_queries_oracle.py), one case per query: ``census_for``
+reads the query's *unexecuted* plan, built once and then collected
+for the oracle comparison. Construct-time pin jobs are not counted;
+they are covered by their own plan-shape tests. This module keeps the
+census path and the test that the counter fires. Regenerate the
+allowlist after an intentional change with:  python tools_scan_census.py
 """
 
-import json
 import os
-
-import pytest
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 CENSUS_PATH = os.path.join(REPO, "SCAN_CENSUS.json")
-
-
-def test_scan_census_not_regressed(spark, sf_dir):
-    from tools_scan_census import census_for
-
-    from etlp_spark.queries import QUERIES
-
-    with open(CENSUS_PATH) as fh:
-        allow = json.load(fh)
-
-    missing = sorted(set(QUERIES) - set(allow))
-    assert not missing, (
-        f"queries missing from SCAN_CENSUS.json (regenerate with "
-        f"tools_scan_census.py): {missing}"
-    )
-
-    offenders = []
-    import gc
-
-    for name, q in QUERIES.items():
-        got = census_for(q.fn(spark, sf_dir))
-        for table, n in got.items():
-            if n > allow[name].get(table, 0):
-                offenders.append(
-                    f"{name}: {table} scanned {n}x "
-                    f"(allowed {allow[name].get(table, 0)})"
-                )
-        spark.catalog.clearCache()
-        gc.collect()
-    assert not offenders, (
-        "duplicate-scan regression (extra Scan parquet nodes vs "
-        "SCAN_CENSUS.json):\n" + "\n".join(offenders)
-    )
 
 
 def test_scan_census_catches_injected_duplicate(spark, sf_dir):

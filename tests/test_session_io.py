@@ -46,6 +46,19 @@ def test_get_spark_extra_conf_overrides_debugging_default(tmp_path):
     assert out.stdout.split()[-2:] == ["true", "True"]
 
 
+def test_get_spark_extra_conf_rejects_static_change_on_live_session(spark):
+    from etlp_spark.session import get_spark
+
+    # getOrCreate applies the builder's runtime confs to the live
+    # session: keep the fixture's shuffle partitions.
+    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    with pytest.raises(ValueError, match=_DEBUG):
+        get_spark(shuffle_partitions=parts, extra_conf={_DEBUG: "true"})
+    assert spark.conf.get(_DEBUG) == "false"
+    same = get_spark(shuffle_partitions=parts, extra_conf={_DEBUG: "false"})
+    assert same is spark
+
+
 def test_missing_column_still_raises_analysis_exception(spark):
     df = spark.range(3)
     with pytest.raises(AnalysisException, match="no_such_col"):

@@ -10,10 +10,7 @@ import argparse
 import sys
 import time
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+from tools_local_correctness import oracle_conn, problems_for
 
 
 def main() -> None:
@@ -22,56 +19,20 @@ def main() -> None:
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
     args = ap.parse_args()
 
-    import duckdb
-
     import __spark_entry__ as entry
     from etlp_spark.session import get_spark
 
     spark = get_spark(app_name="etlp-check-subset")
     qs, osql = entry.queries(), entry.oracle_sql()
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{args.sf}/{t}.parquet')"
-        )
+    con = oracle_conn(args.sf)
     bad = 0
     for name in args.names:
         t0 = time.time()
-        problems: list[str] = []
-        sdf = qs[name](spark, args.sf)
-        sp_cols = sorted(sdf.columns)
-        sp = sorted(
-            str(tuple(row[c] for c in sp_cols)) for row in sdf.collect()
-        )
-        if name in osql:
-            cur = con.execute(osql[name])
-            du_names = [d[0] for d in cur.description]
-            order = sorted(range(len(du_names)), key=lambda i: du_names[i])
-            if sorted(du_names) != sp_cols:
-                problems.append(
-                    f"schema: spark={sp_cols} duckdb={sorted(du_names)}"
-                )
-            du = sorted(
-                str(tuple(r[i] for i in order)) for r in cur.fetchall()
-            )
-            if len(sp) != len(du):
-                problems.append(f"rows: spark={len(sp)} duckdb={len(du)}")
-            elif sp != du:
-                diffs = [i for i, (a, b) in enumerate(zip(sp, du)) if a != b]
-                problems.append(
-                    f"values differ at {len(diffs)} rows, first: "
-                    f"spark={sp[diffs[0]]} duckdb={du[diffs[0]]}"
-                )
-        else:
-            problems.append("rows-only (no oracle declared)")
-        status = "ok" if not problems or problems == [
-            "rows-only (no oracle declared)"
-        ] else "MISMATCH"
+        problems = problems_for(spark, con, qs[name], osql[name], args.sf)
+        status = "ok" if not problems else "MISMATCH"
         if status != "ok":
             bad += 1
-        print(f"{name}: {status} ({len(sp)} rows, "
-              f"{time.time() - t0:.2f}s) {problems}")
+        print(f"{name}: {status} ({time.time() - t0:.2f}s) {problems}")
     sys.exit(1 if bad else 0)
 
 

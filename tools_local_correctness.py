@@ -1,8 +1,7 @@
-"""Builder-side replica of the driver's correctness gate, run over
-EVERY declared query (the gate itself only records the first 50 per
-round): Spark result vs DuckDB oracle at sf0.01, rows compared as
-sorted stringified tuples (the verify-recipe comparison). Writes
-LOCAL_CORRECTNESS_r{N}.json: {query: {status, problems, sec}}.
+"""The sf0.01 oracle sweep: every declared query's Spark result vs its
+DuckDB oracle, rows compared as sorted stringified tuples (the
+verify-recipe comparison). Writes --out as
+{query: {status, problems, sec}}.
 
 Usage: python tools_local_correctness.py [--out FILE] [--sf DIR]
 """
@@ -17,61 +16,61 @@ TABLES = [
 ]
 
 
+def oracle_conn(sf: str):
+    """DuckDB connection with one view per table of the ``sf`` corpus."""
+    import duckdb
+
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM "
+            f"read_parquet('{sf}/{t}.parquet')"
+        )
+    return con
+
+
+def problems_for(spark, con, fn, sql: str, sf: str) -> list[str]:
+    """Mismatches between one query's Spark result and its oracle SQL
+    (empty = match)."""
+    problems: list[str] = []
+    sdf = fn(spark, sf)
+    sp_cols = sorted(sdf.columns)
+    sp = sorted(str(tuple(row[c] for c in sp_cols)) for row in sdf.collect())
+    cur = con.execute(sql)
+    du_names = [d[0] for d in cur.description]
+    order = sorted(range(len(du_names)), key=lambda i: du_names[i])
+    if sorted(du_names) != sp_cols:
+        problems.append(f"schema: spark={sp_cols} duckdb={sorted(du_names)}")
+    du = sorted(str(tuple(r[i] for i in order)) for r in cur.fetchall())
+    if len(sp) != len(du):
+        problems.append(f"rows: spark={len(sp)} duckdb={len(du)}")
+    elif sp != du:
+        bad = next((a, b) for a, b in zip(sp, du) if a != b)
+        problems.append(
+            f"values: first diff {bad[0][:80]!r} vs {bad[1][:80]!r}"
+        )
+    return problems
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--out", default="LOCAL_CORRECTNESS_r14.json")
+    ap.add_argument("--out", default="LOCAL_CORRECTNESS.json")
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
     args = ap.parse_args()
-
-    import duckdb
 
     import __spark_entry__ as entry
     from etlp_spark.session import get_spark
 
     spark = get_spark(app_name="etlp-local-correctness")
     qs, osql = entry.queries(), entry.oracle_sql()
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{args.sf}/{t}.parquet')"
-        )
+    con = oracle_conn(args.sf)
     out: dict = {}
     for name, fn in qs.items():
         t0 = time.time()
-        problems: list[str] = []
         try:
-            sdf = fn(spark, args.sf)
-            sp_cols = sorted(sdf.columns)
-            sp = sorted(
-                str(tuple(row[c] for c in sp_cols))
-                for row in sdf.collect()
-            )
-            if name in osql:
-                cur = con.execute(osql[name])
-                du_names = [d[0] for d in cur.description]
-                order = sorted(range(len(du_names)),
-                               key=lambda i: du_names[i])
-                if sorted(du_names) != sp_cols:
-                    problems.append(
-                        f"schema: spark={sp_cols} duckdb={sorted(du_names)}"
-                    )
-                du = sorted(
-                    str(tuple(r[i] for i in order))
-                    for r in cur.fetchall()
-                )
-                if len(sp) != len(du):
-                    problems.append(f"rows: spark={len(sp)} duckdb={len(du)}")
-                elif sp != du:
-                    bad = next(
-                        (a, b) for a, b in zip(sp, du) if a != b
-                    )
-                    problems.append(f"values: first diff {bad[0][:80]!r} "
-                                    f"vs {bad[1][:80]!r}")
-            else:
-                problems.append("rows-only (no oracle declared)")
+            problems = problems_for(spark, con, fn, osql[name], args.sf)
         except Exception as e:  # noqa: BLE001 - harness records, not hides
-            problems.append(f"error: {type(e).__name__}: {str(e)[:200]}")
+            problems = [f"error: {type(e).__name__}: {str(e)[:200]}"]
         status = "ok" if not problems else "FAIL"
         out[name] = {
             "status": status,

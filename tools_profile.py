@@ -3,8 +3,9 @@ Catalyst planning, and execution (noop sink), and optionally dump the
 ``explain("formatted")`` text to a file.
 
 Usage:
-    python tools_profile.py q1,q2,...  [--plans-dir plans/r17 --suffix _before]
-    python tools_profile.py --top N    # N slowest from BENCH_LOCAL_r17.json
+    python tools_profile.py q1,q2,...  [--plans-dir DIR --suffix _before]
+    python tools_profile.py --top N --bench-json FILE
+        # the N slowest queries of a bench.py JSON record
 
 Timing methodology matches bench.py (noop sink, clearCache between
 queries); the construction/planning split is diagnostic only — the
@@ -25,11 +26,13 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("names", nargs="?", default=None)
     ap.add_argument("--top", type=int, default=None)
-    ap.add_argument("--bench-json", default="BENCH_LOCAL_r17.json")
+    ap.add_argument("--bench-json", default=None)
     ap.add_argument("--plans-dir", default=None)
     ap.add_argument("--suffix", default="_before")
     ap.add_argument("--reps", type=int, default=1)
     args = ap.parse_args()
+    if args.top and not args.bench_json:
+        ap.error("--top needs --bench-json FILE (a bench.py JSON record)")
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -38,7 +41,8 @@ def main() -> None:
     from etlp_spark.session import get_spark
 
     if args.top:
-        bench = json.load(open(args.bench_json))
+        with open(args.bench_json) as fh:
+            bench = json.load(fh)
         names = [
             n
             for n, _ in sorted(bench["queries"].items(), key=lambda kv: -kv[1])[
