@@ -1,9 +1,12 @@
 """The one Arrow-batched per-payload kernel behind every extractor.
 
 ``per_payload`` is the shape each binary/text extractor in this package
-(and each per-doc_id fixture generator in ``queries.py``) runs: a
-``mapInPandas`` pass in the SCAN stage, no shuffle, that calls ``parse``
-once per input row and emits the rows it returns beside the input id.
+runs: a ``mapInPandas`` pass in the SCAN stage, no shuffle, that calls
+``parse`` once per payload and emits the rows it returns beside the
+input id. An optional ``attach`` step produces the payloads from the
+input value in the same pass, so a producer → parser chain (the
+per-doc_id fixture generators in ``queries.py``) is one Python worker
+and one Arrow round trip, not one per step.
 """
 
 from __future__ import annotations
@@ -26,6 +29,7 @@ def per_payload(
     id_col: str,
     payload_col: str,
     strict: bool,
+    attach: "Callable[[Any], list] | None" = None,
 ) -> "DataFrame":
     """Run ``parse(value)`` over ``df[payload_col]`` and return one
     row per dict it yields: ``id_col`` (input name and Spark type kept,
@@ -41,12 +45,24 @@ def per_payload(
     calling ``parse``, and a ``ValueError`` becomes one row carrying its
     text, all other columns NULL.
 
+    ``attach`` (value -> list of payloads), when given, runs on each
+    ``payload_col`` value first and ``parse`` then runs once per
+    payload it returns, every row keeping the input id. It is the row
+    producer, not the parser: it runs OUTSIDE the ``strict`` /
+    ``parse_error`` containment, so any error it raises fails the
+    stage even under ``strict=False``, while a NULL payload it returns
+    is contained like a NULL input. Composing producer and parser here
+    rather than as two ``per_payload`` calls matters because Spark
+    gives every Python map node its own worker per task and its own
+    Arrow round trip.
+
     Batch shape: Spark hands the kernel Arrow batches of up to
     ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows, but output
     is flushed on its own budget, not per input batch: a frame is
-    emitted as soon as the held INPUT payload bytes (``bytes``/``str``
-    values; a lower bound on the parsed mass in Python) reach 64 MiB
-    or the held output rows reach 8,192. A task's Python peak is thus
+    emitted as soon as the held payload bytes (``bytes``/``str``
+    payloads, attached ones included; a lower bound on the parsed mass
+    in Python) reach 64 MiB or the held output rows reach 8,192,
+    checked after every payload. A task's Python peak is thus
     ~64 MiB + ONE payload's parsed rows (~4-5x the file for an
     inflated .warc.gz) — never a whole batch of ~1 GB crawl segments —
     while small payloads still amortize the Arrow transfer."""
@@ -69,22 +85,23 @@ def per_payload(
 
         for pdf in batches:
             for key, value in zip(pdf[id_col], pdf[payload_col]):
-                if value is None and not strict:
-                    got = [{"parse_error": "null payload"}]
-                else:
-                    try:
-                        got = parse(value)
-                    except ValueError as e:
-                        if strict:
-                            raise
-                        got = [{"parse_error": str(e)}]
-                ids.extend([key] * len(got))
-                rows.extend(got)
-                if isinstance(value, (bytes, str)):
-                    held += len(value)
-                if held >= _FLUSH_BYTES or len(rows) >= _FLUSH_ROWS:
-                    yield flush()
-                    ids, rows, held = [], [], 0
+                for payload in attach(value) if attach else (value,):
+                    if payload is None and not strict:
+                        got = [{"parse_error": "null payload"}]
+                    else:
+                        try:
+                            got = parse(payload)
+                        except ValueError as e:
+                            if strict:
+                                raise
+                            got = [{"parse_error": str(e)}]
+                    ids.extend([key] * len(got))
+                    rows.extend(got)
+                    if isinstance(payload, (bytes, str)):
+                        held += len(payload)
+                    if held >= _FLUSH_BYTES or len(rows) >= _FLUSH_ROWS:
+                        yield flush()
+                        ids, rows, held = [], [], 0
         if rows:
             yield flush()
 

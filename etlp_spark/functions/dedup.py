@@ -333,6 +333,16 @@ def simhash_hamming_pairs(
     )
 
 
+def _drop_jvm_handle(df: DataFrame) -> None:
+    """Let ``df``'s JVM handle die with ``df`` by refcount. A py4j
+    ``JavaObject`` caches every ``JavaMember`` it hands out and each
+    member points back at it, so without this the handle (and the JVM
+    plan it pins) outlives ``df`` until the next full cyclic
+    collection. Clearing the cache is safe on a frame still in use:
+    the next method call just re-creates its member."""
+    df._jdf._methods.clear()
+
+
 def connected_components(
     nodes: DataFrame, pairs: DataFrame, id_col: str = "doc_id", max_iter: int = 20
 ) -> DataFrame:
@@ -389,9 +399,8 @@ def connected_components(
         .agg(F.least(F.first("src"), F.min("dst")).alias("cluster"))
         .localCheckpoint(eager=True)
     )
+    ckpt = labels
     converged = False
-    import gc
-
     for _ in range(max_iter):
         # Step 1 — min over own label and every neighbour's label.
         # `stepped` is consumed twice by the pointer-jump self-join, so
@@ -450,17 +459,17 @@ def connected_components(
         )
         stepped.unpersist()
         changed = conv.get["changed"]
-        labels = joined.select(id_col, "cluster")
         # Checkpoint blocks can't be unpersisted safely (locally-
-        # checkpointed RDDs serve reads FROM their blocks), but rounds
-        # ≥2 back are unreferenced once `labels` rebinds — a driver-side
-        # gc.collect() lets Spark's ContextCleaner reclaim them instead
-        # of waiting for an eventual interpreter GC. Refcounting alone
-        # is not enough: the Python DataFrame dies, but its py4j
-        # JavaObject sits in a cycle with its cached JavaMember methods,
-        # so only the cyclic collector releases the JVM handle
-        # (test_connected_components_frees_rounds_two_back).
-        gc.collect()
+        # checkpointed RDDs serve reads FROM their blocks), but the last
+        # round's frames are unreferenced once this round's checkpoint
+        # exists. Dropping their py4j handles here lets Spark's
+        # ContextCleaner reclaim the old blocks without a full
+        # gc.collect() per round (test_connected_components_frees_
+        # rounds_two_back).
+        for done in (ckpt, labels, stepped, parents):
+            _drop_jvm_handle(done)
+        ckpt = joined
+        labels = joined.select(id_col, "cluster")
         if changed == 0:
             converged = True
             break

@@ -45,7 +45,9 @@ embarrassingly parallel → ``mapInPandas`` with Arrow batches
 per batch: payload_bytes × batch_rows must fit the executor). No
 shuffle is introduced: the UDF runs in the scan stage. The metadata
 extractors (``extract_*_metadata``, ``extract_id3_tags``) are one
-byte-walk each through ``functions._payload.per_payload``.
+byte-walk each through ``functions._payload.per_payload``; each
+forwards ``attach`` (value -> payloads), so a payload producer runs in
+the same Python pass as the walk.
 """
 
 from __future__ import annotations
@@ -54,6 +56,7 @@ import hashlib
 import struct
 import zlib
 from collections.abc import Callable, Iterator
+from typing import Any
 
 import numpy as np
 import pandas as pd
@@ -1881,6 +1884,7 @@ def extract_mp3_metadata(
     payload_col: str = "payload",
     *,
     strict: bool = True,
+    attach: "Callable[[Any], list] | None" = None,
     vbr_audit: bool = False,
 ) -> DataFrame:
     """One ``mp3_metadata`` row per payload, through ``per_payload``
@@ -1893,6 +1897,7 @@ def extract_mp3_metadata(
     return per_payload(
         media_df, lambda b: [mp3_metadata(b)], cols,
         id_col=id_col, payload_col=payload_col, strict=strict,
+        attach=attach,
     )
 
 
@@ -2230,6 +2235,7 @@ def extract_id3_tags(
     payload_col: str = "payload",
     *,
     strict: bool = True,
+    attach: "Callable[[Any], list] | None" = None,
 ) -> DataFrame:
     """One ``id3_tags`` row per payload, through ``per_payload``.
     ``strict=False`` contains payloads with no tag at all or an
@@ -2237,6 +2243,7 @@ def extract_id3_tags(
     return per_payload(
         media_df, lambda b: [id3_tags(b)], _ID3_COLS,
         id_col=id_col, payload_col=payload_col, strict=strict,
+        attach=attach,
     )
 
 
@@ -2532,6 +2539,7 @@ def extract_mp4_metadata(
     payload_col: str = "payload",
     *,
     strict: bool = True,
+    attach: "Callable[[Any], list] | None" = None,
 ) -> DataFrame:
     """One ``mp4_metadata`` row per payload, through ``per_payload``.
     ``strict=False`` contains non-container payloads and corrupt box
@@ -2539,6 +2547,7 @@ def extract_mp4_metadata(
     return per_payload(
         media_df, lambda b: [mp4_metadata(b)], _MP4_META_COLS,
         id_col=id_col, payload_col=payload_col, strict=strict,
+        attach=attach,
     )
 
 
@@ -2908,6 +2917,7 @@ def extract_exif_metadata(
     payload_col: str = "payload",
     *,
     strict: bool = True,
+    attach: "Callable[[Any], list] | None" = None,
 ) -> DataFrame:
     """One ``exif_metadata`` row per payload, through ``per_payload``.
     ``strict=False`` contains payloads that are not a JPEG at all.
@@ -2916,6 +2926,7 @@ def extract_exif_metadata(
     return per_payload(
         media_df, lambda b: [exif_metadata(b)], _EXIF_COLS,
         id_col=id_col, payload_col=payload_col, strict=strict,
+        attach=attach,
     )
 
 
@@ -3124,12 +3135,14 @@ def extract_webp_metadata(
     payload_col: str = "payload",
     *,
     strict: bool = True,
+    attach: "Callable[[Any], list] | None" = None,
 ) -> DataFrame:
     """One ``webp_metadata`` row per payload, through ``per_payload``.
     ``strict=False`` contains non-WebP blobs."""
     return per_payload(
         media_df, lambda b: [webp_metadata(b)], _WEBP_COLS,
         id_col=id_col, payload_col=payload_col, strict=strict,
+        attach=attach,
     )
 
 
@@ -3266,6 +3279,9 @@ def png_text_metadata(payload: bytes) -> dict:
     }
 
 
+_PNG_IDAT_BODY = zlib.compress(b"\x00\x00")
+
+
 def encode_png_text(
     *,
     width: int = 1,
@@ -3287,7 +3303,9 @@ def encode_png_text(
     counts it); ``truncate_mid_chunk`` ends the payload inside the
     first text chunk's declared body (IHDR intact, clean=0). A
     minimal IDAT keeps the layout realistic; no pixel semantics are
-    claimed."""
+    claimed, so its body is one fixed deflate stream whatever
+    ``width`` is (a width-sized scanline would allocate 2 GiB at the
+    2^31-1 widths the IHDR field allows)."""
     ihdr = (
         width.to_bytes(4, "big") + height.to_bytes(4, "big")
         + bytes([bit_depth, color_type, 0, 0, 0])
@@ -3324,7 +3342,7 @@ def encode_png_text(
         c[-1] ^= 0x01
         text_chunks[0] = bytes(c)
     out.extend(text_chunks)
-    out.append(_png_chunk(b"IDAT", zlib.compress(b"\x00" * (width + 1))))
+    out.append(_png_chunk(b"IDAT", _PNG_IDAT_BODY))
     out.append(_png_chunk(b"IEND", b""))
     payload = b"".join(out)
     if truncate_mid_chunk and text_chunks:
@@ -3358,12 +3376,14 @@ def extract_png_text_metadata(
     payload_col: str = "payload",
     *,
     strict: bool = True,
+    attach: "Callable[[Any], list] | None" = None,
 ) -> DataFrame:
     """One ``png_text_metadata`` row per payload, through
     ``per_payload``. ``strict=False`` contains non-PNG blobs."""
     return per_payload(
         media_df, lambda b: [png_text_metadata(b)], _PNG_TEXT_COLS,
         id_col=id_col, payload_col=payload_col, strict=strict,
+        attach=attach,
     )
 
 
@@ -4435,6 +4455,7 @@ def extract_audio_container_metadata(
     payload_col: str = "payload",
     *,
     strict: bool = True,
+    attach: "Callable[[Any], list] | None" = None,
 ) -> DataFrame:
     """One ``audio_container_metadata`` row per payload, through
     ``per_payload``. ``strict=False`` contains blobs that are neither
@@ -4442,6 +4463,7 @@ def extract_audio_container_metadata(
     return per_payload(
         media_df, lambda b: [audio_container_metadata(b)], _AUDIO_CONTAINER_COLS,
         id_col=id_col, payload_col=payload_col, strict=strict,
+        attach=attach,
     )
 
 

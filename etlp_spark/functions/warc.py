@@ -47,7 +47,7 @@ Reference: engine-added (SURVEY.md §2.2 text-pipeline family); WARC
 from __future__ import annotations
 
 import zlib
-from typing import TYPE_CHECKING, Iterable
+from typing import TYPE_CHECKING, Any, Callable, Iterable
 
 from etlp_spark.functions._payload import per_payload
 
@@ -598,14 +598,17 @@ def extract_warc_records(
     payload_col: str = "payload",
     *,
     strict: bool = True,
+    attach: "Callable[[Any], list] | None" = None,
 ) -> "DataFrame":
     """One row per ``warc_records`` record, through ``per_payload``
     (whose flush budget bounds a task holding ~1 GB crawl segments);
     ``strict=False`` contains a non-WARC blob as a single NULL row +
-    ``parse_error``."""
+    ``parse_error``. ``attach`` (value -> payloads) is forwarded: the
+    producer runs in the same Python pass as the walk."""
     return per_payload(
         media_df, warc_records, _WARC_COLS,
         id_col=id_col, payload_col=payload_col, strict=strict,
+        attach=attach,
     )
 
 

@@ -14777,15 +14777,17 @@ def x143_mp3_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     the gate proves the byte-level walk exactly inverts the
     generator, tags excluded from audio accounting, spec arithmetic
     (frame_bytes = 144000*kbps//sr + pad; duration = n*1152*1000//sr)
-    reproduced to the byte. Real corpora swap the attach kernel for
-    a parquet binary column; the walker is format-real either way
-    (pytest covers Layer I/II, MPEG-2, truncation, spliced streams).
+    reproduced to the byte. Real corpora drop the ``attach``
+    producer and point the walk at a parquet binary column; the
+    walker is format-real either way (pytest covers Layer I/II,
+    MPEG-2, truncation, spliced streams).
 
-    Scale shape: two Arrow-batched mapInPandas kernels fused in ONE
-    scan stage (attach → walk), no shuffle, no join on the Spark
-    side; per-batch memory is payload_bytes x batch_rows (Arrow
-    maxRecordsPerBatch bounds it). The oracle's join is DuckDB-side
-    only. Reference: engine-added (SURVEY.md §2.2 multimodal
+    Scale shape: ONE Arrow-batched mapInPandas pass in the scan
+    stage: the fixture producer runs as ``per_payload``'s ``attach``
+    in the same Python worker as the walk (one Arrow round trip, not
+    one per step), no shuffle, no join on the Spark side; per-task
+    memory is bounded by ``per_payload``'s flush budget. The oracle's
+    join is DuckDB-side only. Reference: engine-added (SURVEY.md §2.2 multimodal
     family, with x9)."""
     from etlp_spark.functions.multimodal import (
         encode_mp3_frames,
@@ -14813,11 +14815,10 @@ def x143_mp3_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
             id3v1=(d % 11 == 0),
         )
 
-    media = per_payload(
-        docs, lambda d: [{"payload": make(d)}], [("payload", "binary")],
-        id_col="media_id", payload_col="media_id", strict=True,
+    return extract_mp3_metadata(
+        docs, payload_col="media_id",
+        attach=lambda d: [make(d)],
     )
-    return extract_mp3_metadata(media)
 
 
 @_register(
@@ -14886,9 +14887,8 @@ def x144_mp3_vbr_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     walk paths by construction — the header audit is exact, not
     approximate.
 
-    Scale shape: x143's — two Arrow-batched mapInPandas kernels in
-    ONE scan stage, no shuffle, no Spark-side join; per-batch memory
-    bounded by Arrow maxRecordsPerBatch. The oracle's join is
+    Scale shape: x143's — attach → walk as ONE mapInPandas pass in
+    the scan stage, no shuffle, no Spark-side join. The oracle's join is
     DuckDB-side only. Reference: engine-added (SURVEY.md §2.2
     multimodal family, with x9/x143)."""
     from etlp_spark.functions.multimodal import (
@@ -14914,11 +14914,10 @@ def x144_mp3_vbr_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             p = p[: 144000 * 64 // sr + 2]  # head-truncated
         return p
 
-    media = per_payload(
-        docs, lambda d: [{"payload": make(d)}], [("payload", "binary")],
-        id_col="media_id", payload_col="media_id", strict=True,
+    meta = extract_mp3_metadata(
+        docs, payload_col="media_id", strict=False, vbr_audit=True,
+        attach=lambda d: [make(d)],
     )
-    meta = extract_mp3_metadata(media, strict=False, vbr_audit=True)
     # NULL-free output edge (comparator tuples sort across engines):
     # contained-error rows carry sentinel -1 / 'none' / '' instead of
     # SQL NULL — the audit stays lossless.
@@ -15136,12 +15135,11 @@ def x146_mp4_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     always-present audio track. duration_ms = units*1000//timescale
     is exact integer arithmetic on both engines.
 
-    Scale shape: x143/x144's — two Arrow-batched mapInPandas kernels
-    (attach → walk) fused in ONE scan stage, no shuffle, no Spark-
-    side join; per-batch memory bounded by Arrow maxRecordsPerBatch;
-    per-row error containment (garbage payload → sentinel row +
-    parse_error, not stage failure). Real corpora swap the attach
-    kernel for a parquet binary column. Reference: engine-added
+    Scale shape: x143/x144's — attach → walk as ONE mapInPandas pass
+    in the scan stage, no shuffle, no Spark-side join; per-row error
+    containment (garbage payload → sentinel row + parse_error, not
+    stage failure). Real corpora drop ``attach`` and read a parquet
+    binary column. Reference: engine-added
     (SURVEY.md §2.2 multimodal family, with x9/x143/x144)."""
     from etlp_spark.functions.multimodal import (
         encode_mp4_boxes,
@@ -15182,11 +15180,10 @@ def x146_mp4_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
             p = p[:-8]  # cut INTO the mdat body (head crawl)
         return p
 
-    media = per_payload(
-        docs, lambda d: [{"payload": make(d)}], [("payload", "binary")],
-        id_col="media_id", payload_col="media_id", strict=True,
+    meta = extract_mp4_metadata(
+        docs, payload_col="media_id", strict=False,
+        attach=lambda d: [make(d)],
     )
-    meta = extract_mp4_metadata(media, strict=False)
     # NULL-free output edge (x144's sentinel pattern): contained-error
     # rows carry -1 / 'none' / '' instead of SQL NULL.
     return meta.select(
@@ -15262,10 +15259,9 @@ def x147_id3_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
     (walkers must count-and-skip binary frames), and a TRCK '3/12'
     set-size suffix on even ids (parsers take the leading digits).
 
-    Scale shape: x143/x144/x146's — two Arrow-batched mapInPandas
-    kernels (attach → walk) fused in ONE scan stage, no shuffle;
-    per-row error containment. Real corpora swap the attach kernel
-    for a parquet binary column. Reference: engine-added (SURVEY.md
+    Scale shape: x143/x144/x146's — attach → walk as ONE mapInPandas
+    pass in the scan stage, no shuffle; per-row error containment.
+    Real corpora drop ``attach`` and read a parquet binary column. Reference: engine-added (SURVEY.md
     §2.2 multimodal family); tag layouts from the public id3.org
     informal standards."""
     from etlp_spark.functions.multimodal import (
@@ -15319,11 +15315,10 @@ def x147_id3_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return tag + audio
 
-    media = per_payload(
-        docs, lambda d: [{"payload": make(d)}], [("payload", "binary")],
-        id_col="media_id", payload_col="media_id", strict=True,
+    tags = extract_id3_tags(
+        docs, payload_col="media_id", strict=False,
+        attach=lambda d: [make(d)],
     )
-    tags = extract_id3_tags(media, strict=False)
     # NULL-free output edge (x144/x146's sentinel pattern)
     return tags.select(
         "media_id",
@@ -15409,10 +15404,9 @@ def x148_jpeg_exif(spark: SparkSession, sf_dir: str) -> DataFrame:
     with 'S'/'W' negative references exercised (doc_id%4, doc_id%5
     splits) and centisecond-precision rationals (den=100).
 
-    Scale shape: x146/x147's — two Arrow-batched mapInPandas kernels
-    (attach → walk) fused in ONE scan stage, no shuffle; per-row
-    error containment. Real corpora swap the attach kernel for a
-    parquet binary column. Reference: engine-added (SURVEY.md §2.2
+    Scale shape: x146/x147's — attach → walk as ONE mapInPandas pass
+    in the scan stage, no shuffle; per-row error containment. Real
+    corpora drop ``attach`` and read a parquet binary column. Reference: engine-added (SURVEY.md §2.2
     multimodal family); EXIF 2.3 / TIFF 6.0 public layouts."""
     from etlp_spark.functions.multimodal import (
         encode_exif,
@@ -15467,11 +15461,10 @@ def x148_jpeg_exif(spark: SparkSession, sf_dir: str) -> DataFrame:
             gps=gps,
         )
 
-    media = per_payload(
-        docs, lambda d: [{"payload": make(d)}], [("payload", "binary")],
-        id_col="media_id", payload_col="media_id", strict=True,
+    meta = extract_exif_metadata(
+        docs, payload_col="media_id", strict=False,
+        attach=lambda d: [make(d)],
     )
-    meta = extract_exif_metadata(media, strict=False)
     # NULL-free output edge (x144/x146/x147's sentinel pattern)
     return meta.select(
         "media_id",
@@ -15554,9 +15547,8 @@ def x149_riff_webp(spark: SparkSession, sf_dir: str) -> DataFrame:
     plain lossy VP8, and lossless VP8L (alpha bit) — with dimensions
     closed-form from doc_id.
 
-    Scale shape: x146-x148's — two Arrow-batched mapInPandas kernels
-    (attach → walk) fused in ONE scan stage, no shuffle; per-row
-    error containment. Reference: engine-added (SURVEY.md §2.2
+    Scale shape: x146-x148's — attach → walk as ONE mapInPandas pass
+    in the scan stage, no shuffle; per-row error containment. Reference: engine-added (SURVEY.md §2.2
     multimodal family); RIFF/WebP container + VP8/VP8L public
     specs."""
     from etlp_spark.functions.multimodal import (
@@ -15592,11 +15584,10 @@ def x149_riff_webp(spark: SparkSession, sf_dir: str) -> DataFrame:
             fmt="vp8l", width=w, height=h, alpha=d % 2 == 1,
         )
 
-    media = per_payload(
-        docs, lambda d: [{"payload": make(d)}], [("payload", "binary")],
-        id_col="media_id", payload_col="media_id", strict=True,
+    meta = extract_webp_metadata(
+        docs, payload_col="media_id", strict=False,
+        attach=lambda d: [make(d)],
     )
-    meta = extract_webp_metadata(media, strict=False)
     # NULL-free output edge (x144/x146-x148's sentinel pattern)
     return meta.select(
         "media_id",
@@ -15680,9 +15671,8 @@ def x150_png_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     (latin-1) on odd, Author as zlib zTXt when doc_id%3==0, a
     Software chunk when doc_id%4==0, and gAMA 45455 when doc_id%5==0.
 
-    Scale shape: x146-x149's — two Arrow-batched mapInPandas kernels
-    (attach → walk) fused in ONE scan stage, no shuffle; per-row
-    error containment. Reference: engine-added (SURVEY.md §2.2
+    Scale shape: x146-x149's — attach → walk as ONE mapInPandas pass
+    in the scan stage, no shuffle; per-row error containment. Reference: engine-added (SURVEY.md §2.2
     multimodal family); W3C PNG spec chunk layouts."""
     from etlp_spark.functions.multimodal import (
         encode_png_text,
@@ -15728,11 +15718,10 @@ def x150_png_text(spark: SparkSession, sf_dir: str) -> DataFrame:
             gamma_scaled=45455 if d % 5 == 0 else None,
         )
 
-    media = per_payload(
-        docs, lambda d: [{"payload": make(d)}], [("payload", "binary")],
-        id_col="media_id", payload_col="media_id", strict=True,
+    meta = extract_png_text_metadata(
+        docs, payload_col="media_id", strict=False,
+        attach=lambda d: [make(d)],
     )
-    meta = extract_png_text_metadata(media, strict=False)
     # NULL-free output edge (x144/x146-x149's sentinel pattern)
     return meta.select(
         "media_id",
@@ -15905,10 +15894,10 @@ def x151_warc_wet(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunked path runs inside the gated query, not just unit tests.
 
     Scale shape: one payload EXPLODES to one row per record inside
-    the same Arrow-batched scan stage (attach → walk fused, no
-    shuffle); real corpora swap the attach kernel for a binaryFile
-    scan (``read_warc``), parallel per file — Common Crawl's ~1 GB
-    segment granularity. Reference: engine-added (SURVEY.md §2.2
+    ONE mapInPandas pass in the scan stage (attach → walk in one
+    Python worker, no shuffle); real corpora drop ``attach`` for a
+    binaryFile scan (``read_warc``), parallel per file — Common
+    Crawl's ~1 GB segment granularity. Reference: engine-added (SURVEY.md §2.2
     text-pipeline family); ISO 28500 / WARC 1.0 public layouts."""
     from etlp_spark.functions.warc import encode_warc, extract_warc_records
 
@@ -15985,11 +15974,10 @@ def x151_warc_wet(spark: SparkSession, sf_dir: str) -> DataFrame:
                 recs.append(conv(d, i))
         return encode_warc(recs)
 
-    media = per_payload(
-        docs, lambda d: [{"payload": make(d)}], [("payload", "binary")],
-        id_col="media_id", payload_col="media_id", strict=True,
+    recs = extract_warc_records(
+        docs, payload_col="media_id", strict=False,
+        attach=lambda d: [make(d)],
     )
-    recs = extract_warc_records(media, strict=False)
     # NULL-free output edge (x144/x146-x150's sentinel pattern)
     return recs.select(
         "media_id",
@@ -16092,9 +16080,8 @@ def x152_flac_ogg(spark: SparkSession, sf_dir: str) -> DataFrame:
     uncaptured X-KEY comment counted iff doc_id%4==0, exact
     integer-micros duration).
 
-    Scale shape: x146-x151's — two Arrow-batched mapInPandas kernels
-    (attach → walk) fused in ONE scan stage, no shuffle; per-row
-    error containment. Reference: engine-added (SURVEY.md §2.2
+    Scale shape: x146-x151's — attach → walk as ONE mapInPandas pass
+    in the scan stage, no shuffle; per-row error containment. Reference: engine-added (SURVEY.md §2.2
     multimodal family); xiph.org FLAC/Vorbis I + RFC 3533 public
     layouts."""
     from etlp_spark.functions.multimodal import (
@@ -16135,11 +16122,10 @@ def x152_flac_ogg(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         return encode_ogg_vorbis(corrupt_comment_crc=d % 7 == 0, **kw)
 
-    media = per_payload(
-        docs, lambda d: [{"payload": make(d)}], [("payload", "binary")],
-        id_col="media_id", payload_col="media_id", strict=True,
+    meta = extract_audio_container_metadata(
+        docs, payload_col="media_id", strict=False,
+        attach=lambda d: [make(d)],
     )
-    meta = extract_audio_container_metadata(media, strict=False)
     # NULL-free output edge (x144/x146-x151's sentinel pattern)
     return meta.select(
         "media_id",
@@ -16234,8 +16220,9 @@ def x153_orientation_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     quadrant permutation of each orientation, verified against
     numpy).
 
-    Scale shape: attach + descriptor fused in the scan stage
-    (Arrow-batched mapInPandas, real decode per payload), then ONE
+    Scale shape: ONE mapInPandas pass in the scan stage — the two
+    variant payloads are ``attach``ed per doc and the descriptor
+    (real decode) runs on each in the same Python worker — then ONE
     shuffle on the band key — exactly how MinHash-LSH banding
     shuffles (functions/dedup.py); cluster membership is never
     compared all-pairs. Reference: engine-added (SURVEY.md §2.2
@@ -16278,23 +16265,20 @@ def x153_orientation_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         up[8:, 8:] = levels[3]
         o = 2 + d % 7
         stored = np.ascontiguousarray(gens[o](up))
-        rows = []
-        for variant, px, tag in ((0, up, 1), (1, stored, o)):
+        payloads = []
+        for px, tag in ((up, 1), (stored, o)):
             jp = encode_jpeg(px, quality=95)
-            rows.append(
-                {"variant": variant, "payload": jp[:2] + app1(tag) + jp[2:]}
-            )
-        return rows
+            payloads.append(jp[:2] + app1(tag) + jp[2:])
+        return payloads
 
-    media = per_payload(
-        docs, variants, [("variant", "int"), ("payload", "binary")],
-        id_col="media_id", payload_col="media_id", strict=True,
-    )
+    # the two variants are attached payloads of ONE input row: the
+    # descriptor runs on each in the same pass that encodes them
     keys = per_payload(
-        media,
+        docs,
         lambda b: [orientation_invariant_descriptor(b)],
         [("raw_key", "string"), ("norm_key", "string")],
-        id_col="media_id", payload_col="payload", strict=True,
+        id_col="media_id", payload_col="media_id", strict=True,
+        attach=variants,
     )
     # the band-join shuffle: group candidates by normalized key
     return keys.groupBy("norm_key").agg(
@@ -16347,11 +16331,12 @@ def x154_warc_ingest_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     and punctuation counts are all exact integers the oracle rebuilds
     from the same string arithmetic (no cross-engine float surface).
 
-    Scale shape: binaryFile-equivalent attach → record explosion →
-    tokenize, ALL inside one Arrow-batched scan stage (the walk
-    yields text columns; the token expressions are codegen'd JVM
-    column math per x1's plan) — no shuffle anywhere: container
-    ingest to quality scores at parquet-scan speed. Reference:
+    Scale shape: binaryFile-equivalent attach → record explosion as
+    ONE mapInPandas pass, then tokenize in the same scan stage (the
+    walk yields text columns; the conversion filter and the token
+    expressions are codegen'd JVM column math per x1's plan) — no
+    shuffle anywhere: container ingest to quality scores at
+    parquet-scan speed. Reference:
     engine-added (SURVEY.md §2.2 text-pipeline family); composes
     x151's walker with x1's operators."""
     from etlp_spark.functions import text as T
@@ -16383,11 +16368,10 @@ def x154_warc_ingest_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         return encode_warc(recs)
 
-    media = per_payload(
-        docs, lambda d: [{"payload": make(d)}], [("payload", "binary")],
-        id_col="media_id", payload_col="media_id", strict=True,
+    recs = extract_warc_records(
+        docs, payload_col="media_id",
+        attach=lambda d: [make(d)],
     )
-    recs = extract_warc_records(media)
     conv = recs.where(F.col("warc_type") == "conversion")
     toks = T.tokens("text")
     return conv.select(
@@ -16433,7 +16417,7 @@ def x155_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     responses (the bulk of a real Common Crawl drop), walk out the
     HTML entities (dechunk/inflate per wire encoding), strip markup
     with the stdlib ``html.parser`` byte-walk
-    (``functions.html.extract_html_text``: script/style/comment
+    (``functions.html.html_to_text``: script/style/comment
     subtrees dropped, character references decoded, block tags
     separate / inline tags glue, ``<title>`` captured separately,
     whitespace collapsed), then run token stats on the PROSE — the
@@ -16454,16 +16438,17 @@ def x155_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     dropped-subtree counts, and token stats from the same integer
     arithmetic — no float surface.
 
-    Scale shape: attach → WARC walk → HTML walk are CHAINED
-    Arrow-batched kernels in ONE scan stage (filters between them
-    stay in-stage), token math is codegen'd JVM column work — zero
-    shuffles end to end, the x154 posture. Real corpora swap the
-    attach kernel for ``read_warc``'s binaryFile scan, parallel per
-    file. Reference: engine-added (SURVEY.md §2.2 text-pipeline
-    family); stdlib html.parser behavior only."""
+    Scale shape: attach → WARC walk → text/html filter → HTML walk
+    are ONE mapInPandas pass (the walks compose into one ``parse``,
+    so one Python worker and one Arrow round trip per task instead of
+    three); token math is codegen'd JVM column work — zero shuffles
+    end to end, the x154 posture. Real corpora drop ``attach`` for
+    ``read_warc``'s binaryFile scan, parallel per file. Reference:
+    engine-added (SURVEY.md §2.2 text-pipeline family); stdlib
+    html.parser behavior only."""
     from etlp_spark.functions import text as T
-    from etlp_spark.functions.html import extract_html_text
-    from etlp_spark.functions.warc import encode_warc, extract_warc_records
+    from etlp_spark.functions.html import html_to_text
+    from etlp_spark.functions.warc import encode_warc, warc_records
 
     docs = _t_fanout(spark, sf_dir, "documents").select(
         F.col("doc_id").cast("bigint").alias("media_id")
@@ -16499,16 +16484,22 @@ def x155_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         ])
 
-    media = per_payload(
-        docs, lambda d: [{"payload": make(d)}], [("payload", "binary")],
+    def html_pages(payload):
+        # WARC walk -> text/html responses -> HTML walk, as one parse
+        return [
+            html_to_text(r["text"])
+            for r in warc_records(payload)
+            if r["warc_type"] == "response"
+            and r["http_content_type"] == "text/html"
+        ]
+
+    prose = per_payload(
+        docs, html_pages,
+        [("title", "string"), ("text", "string"), ("n_tags", "int"),
+         ("n_links", "int"), ("n_dropped", "int")],
         id_col="media_id", payload_col="media_id", strict=True,
+        attach=lambda d: [make(d)],
     )
-    recs = extract_warc_records(media)
-    pages = recs.where(
-        (F.col("warc_type") == "response")
-        & (F.col("http_content_type") == "text/html")
-    ).select("media_id", F.col("text").alias("html"))
-    prose = extract_html_text(pages)
     return prose.select(
         "media_id",
         "title",

@@ -637,7 +637,8 @@ def test_connected_components_frees_rounds_two_back(spark, monkeypatch):
     from two rounds back AND its JVM handle are dead when the next
     round checkpoints. Refcounting frees the Python DataFrame, but the
     py4j handle sits in a JavaObject/JavaMember cycle, so this holds
-    only because the loop runs ``gc.collect()`` each round."""
+    only because the loop breaks that cycle on each finished round's
+    frames (``dedup._drop_jvm_handle``)."""
     import gc
     import weakref
 
@@ -1126,7 +1127,9 @@ def test_extractor_strict_and_id_passthrough_through_spark(spark, fmt):
     type and value end to end; under strict=False a garbage payload
     and a NULL payload each become one NULL-metadata row carrying
     ``parse_error`` instead of killing the stage; strict=True fails
-    fast on the garbage."""
+    fast on the garbage. The same holds for payloads an ``attach``
+    producer makes in the same pass, one row per payload; an error
+    in ``attach`` itself fails the stage under strict=False too."""
     extract, kw, good, fields, err = _extractor_cases()[fmt]
     big = 2**40 + 7  # would silently wrap in int32
     df = spark.createDataFrame(
@@ -1153,6 +1156,36 @@ def test_extractor_strict_and_id_passthrough_through_spark(spark, fmt):
         extract(
             df.where(F.col("payload").isNotNull()),
             id_col="blob_id", strict=True, **kw,
+        ).collect()
+
+    # ``attach`` produces the payloads from the id in the same pass:
+    # several payloads per row, each parsed under the row's id; a NULL
+    # one is contained like a NULL input; an attach error is NOT
+    # contained, even under strict=False.
+    keys = spark.createDataFrame([(big,), (5,)], "blob_id bigint")
+    produced = {big: [good, good], 5: [None]}
+    out = extract(
+        keys, id_col="blob_id", payload_col="blob_id", strict=False,
+        attach=lambda k: produced[int(k)], **kw,
+    )
+    assert dict(out.dtypes)["blob_id"] == "bigint"
+    rows = [r.asDict() for r in out.collect()]
+    assert sorted(r["blob_id"] for r in rows) == [5, big, big]
+    for r in rows:
+        if r["blob_id"] == big:
+            assert r["parse_error"] is None
+            assert {k: r[k] for k in fields} == fields
+        else:
+            assert r["parse_error"] == "null payload"
+            assert all(r[k] is None for k in fields)
+
+    def broken(k):
+        raise ValueError(f"attach failed on {k}")
+
+    with pytest.raises(Exception, match="attach failed on"):
+        extract(
+            keys, id_col="blob_id", payload_col="blob_id", strict=False,
+            attach=broken, **kw,
         ).collect()
 
 

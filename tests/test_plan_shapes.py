@@ -665,3 +665,39 @@ def test_conformal_window_over_residual_histogram(spark):
         f"x142's window no longer consumes the residual histogram:\n{plan[:3000]}"
     )
     assert "SortMergeJoin" not in plan, plan[:3000]
+
+
+#: Producer → parser chains over per-payload kernels: each must run as
+#: ONE Python map node. Spark gives every MapInPandas node its own
+#: Python worker per task and its own Arrow round trip, so k chained
+#: kernels hold k workers and cross the boundary 2k times.
+ONE_PYTHON_PASS = [
+    "x143_mp3_metadata",
+    "x144_mp3_vbr_audit",
+    "x146_mp4_metadata",
+    "x147_id3_tags",
+    "x148_jpeg_exif",
+    "x149_riff_webp",
+    "x150_png_text",
+    "x151_warc_wet",
+    "x152_flac_ogg",
+    "x153_orientation_dedup",
+    "x154_warc_ingest_quality",
+    "x155_html_extract",
+]
+
+
+@pytest.mark.parametrize("name", ONE_PYTHON_PASS)
+def test_payload_chain_is_one_python_map(spark, name):
+    from tests.test_plan_lint import _node_name, _walk
+
+    df = QUERIES[name].fn(spark, SF)
+    df.collect()  # finalises the frame's own adaptive plan
+    maps = [
+        _node_name(n)
+        for n in _walk(df._jdf.queryExecution().executedPlan())
+        if "MapIn" in _node_name(n)
+    ]
+    assert len(maps) == 1, (
+        f"{name} runs {len(maps)} Python map nodes {maps}, expected one"
+    )
